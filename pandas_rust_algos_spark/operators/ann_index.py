@@ -362,8 +362,7 @@ def build_ivfpq_index_fixed(
     from pandas_rust_algos_spark.operators.ann_portable import (
         _argmin_cell,
         _lit_lmatrix,
-        _train_centroids_fast,
-        _train_centroids_multi,
+        _train_centroids,
     )
     from pandas_rust_algos_spark.operators.kmeans import _quantize
     from pandas_rust_algos_spark.operators.similarity import probe_dims
@@ -375,7 +374,7 @@ def build_ivfpq_index_fixed(
     sub = dims // m
     pts = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
-    coarse = _train_centroids_fast(pts, id_col, k=n_cells, iters=iters)
+    coarse = _train_centroids(pts, id_col, k=n_cells, iters=iters)[0]
     cmatrix = _lit_lmatrix(coarse)
     asg = (
         pts.withColumn("cell", _argmin_cell(F.col("v"), cmatrix))
@@ -388,7 +387,7 @@ def build_ivfpq_index_fixed(
 
     # m residual sub-books in LOCKSTEP (one seed job + one combined
     # partial-sum job per iteration; bit-identical per book)
-    books = _train_centroids_multi(
+    books = _train_centroids(
         asg.select(id_col, F.col("r").alias("v")), id_col,
         k=k_codes, iters=iters,
         specs=[(j * sub + 1, sub, f":{j}") for j in range(m)])

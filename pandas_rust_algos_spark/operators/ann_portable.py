@@ -32,9 +32,11 @@ same split as ``minhash_near_dupes`` (xxhash64 default) vs
 
 Scale shape (both ops):
 
-- Quantizer training is Lloyd over the corpus (or a bounded sample a
-  caller can pre-apply) — per iteration one broadcast of k×dim
-  centroids and one map-side-combined (cluster, dim) sum shuffle.
+- Quantizer training is :func:`_train_centroids`, Lloyd over the
+  corpus (or a bounded sample a caller can pre-apply): one seed job,
+  then per iteration one narrow ``mapInPandas`` partial-sum pass, with
+  the k×dim centroid state kept on the driver. The m PQ sub-codebooks
+  train in lockstep on the same jobs.
 - The trained centroids are METADATA (n_cells×dim / m×k_codes×sub
   longs): they collect to the driver once and ride the search plans
   as array literals, so corpus-side cell assignment and PQ encoding
@@ -54,14 +56,11 @@ prescribed exactly this construction).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pandas_rust_algos_spark import cachelife
 from pandas_rust_algos_spark.operators.kmeans import (
-    _fixed_centroids,
     _quantize,
     check_exact_blas,
     sql_kmeans_fixed_ctes,
@@ -138,24 +137,16 @@ def _top_cells(vcol: Column, cmatrix: Column, n: int) -> Column:
     )
 
 
-def _collect_centroids(cents: DataFrame) -> list[list[int]]:
-    """Metadata-sized driver collect (k rows of dim longs), cid-ordered."""
-    rows = sorted((r["cid"], list(r["c"])) for r in cents.collect())
-    return [c for _, c in rows]
-
-
-#: Above this many scan tasks, the Lloyd trainers fold their per-task
+#: Above this many scan tasks, the Lloyd trainer folds its per-task
 #: partial sums through a bounded round-robin repartition + one more
 #: exact-int64 merge before the driver collect, so the driver receives
 #: at most ``_LLOYD_MERGE_TASKS × Σk`` rows regardless of input task
 #: count (at 1e9-row scale the direct collect grows linearly with task
-#: count — a multi-GB driver payload; r12 VERDICT next-#4). Below the
-#: threshold the fold is skipped: the repartition adds one (tiny)
-#: shuffle stage per iteration, which the job-latency-bound gates would
-#: pay for nothing. Env-tunable for cluster deployments.
-_LLOYD_MERGE_THRESHOLD = int(
-    os.environ.get("PRA_LLOYD_MERGE_THRESHOLD", "64"))
-_LLOYD_MERGE_TASKS = int(os.environ.get("PRA_LLOYD_MERGE_TASKS", "32"))
+#: count — a multi-GB driver payload). Below the threshold the fold is
+#: skipped: the repartition adds one (tiny) shuffle stage per
+#: iteration, which the job-latency-bound gates would pay for nothing.
+_LLOYD_MERGE_THRESHOLD = 64
+_LLOYD_MERGE_TASKS = 32
 
 
 def _bounded_partials(parts: DataFrame, n_tasks: int,
@@ -197,157 +188,46 @@ def _bounded_partials(parts: DataFrame, n_tasks: int,
         _fold, schema)
 
 
-def _train_centroids_fast(
+def _train_centroids(
     pts: DataFrame,
     id_col: str,
     *,
     k: int,
     iters: int,
-    salt: str = "",
-) -> list[list[int]]:
-    """Driver-coordinated twin of ``kmeans._fixed_centroids`` —
-    BIT-IDENTICAL output (same md5 seed ranking, same exact integer
-    distances with lowest-cid ties, same ``floor(sum/count)`` updates,
-    same empty-cluster carry; pinned by a unit test), but each Lloyd
-    iteration is ONE exact-BLAS ``mapInPandas`` pass emitting integer
-    partial sums instead of a rows×k crossJoin + per-id window sort:
+    specs: tuple[tuple[int, int | None, str], ...] = ((1, None, ""),),
+) -> list[list[list[int]]]:
+    """The engine's one fixed-point Lloyd trainer over pre-quantized
+    ``(id, v)`` points. Returns one codebook per spec, each a
+    cid-ordered list of at most ``k`` integer centroids, BIT-IDENTICAL
+    to the DuckDB CTE chain :func:`kmeans.sql_kmeans_fixed_ctes`
+    (pinned by tests/test_similarity.py).
 
+    ``specs`` is ``[(offset, width, salt), ...]``: a 1-based
+    ``F.slice`` window of ``v`` plus the book's seed salt. ``width``
+    ``None`` trains on the whole vector (the default: one book), its
+    width read off the seed rows. All books train in LOCKSTEP, so m
+    books cost what one does — one combined seed job, then ONE
+    partial-sum job per iteration (the trainings are
+    job-overhead-bound, not data-bound).
+
+    Per book the math is the SQL chain's:
+
+    - seeds are the k rows with the smallest md5-prefix hash of
+      ``id || salt`` (ties on id) over the FULL frame; fewer rows than
+      ``k`` clamp ``k``;
     - distances come from ``||v||² − 2·(M @ C.T) + ||c||²`` in float64
       — every term is an exact integer below 2^53 on the micro-unit
       grid, so the matrix form IS the exact distance and ``argmin``
       (first minimum = lowest cid) reproduces the (d, cid) tie rule;
-    - per-batch sums accumulate in int64 (exact) and merge in the
-      DRIVER (the collect receives ≤ tasks×k rows of dim longs; above
-      ``_LLOYD_MERGE_THRESHOLD`` scan tasks a bounded two-level fold
-      caps it at ``_LLOYD_MERGE_TASKS``×k rows so driver memory does
-      not grow with task count), and the centroid state (k×dim longs —
-      metadata) lives on the driver between iterations, exactly the
-      state this module's callers collect at the end anyway (the
-      pure-DataFrame zero-collect implementation remains
-      ``kmeans_fixed``, which the ``kmeans_clusters`` gate exercises).
+    - updates are ``floor(sum/count)`` of exact int64 sums; an empty
+      cluster keeps its previous centroid.
 
-    At gate scale (5k–20k vectors) this measures FLAT against the
-    DataFrame chain — both are per-job-overhead-bound. The win is the
-    SHAPE: the DataFrame chain's per-iteration argmin is a
-    ``crossJoin`` expanded to rows×k and SHUFFLE-SORTED by id for the
-    rank window, while this pass never shuffles a row — per iteration
-    it moves exactly k×dim partial-sum rows. At 10⁹ corpus rows ×16
-    cells that is the difference between re-shuffling 16B expanded
-    rows per iteration and a narrow scan."""
-    import numpy as np
-    import pandas as pd
-
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))),
-            1, 15),
-        16, 10,
-    ).cast("long")
-    seeds = (
-        pts.withColumn("__h", h).orderBy("__h", id_col).limit(k)
-        .select("v").collect()
-    )
-    cents = [list(r["v"]) for r in seeds]
-    if not cents:
-        return cents
-    # fewer non-null vectors than k: clamp, mirroring
-    # kmeans._fixed_centroids (which simply has fewer seed rows) —
-    # previously the update loop indexed past the seed list (r7 ADVICE)
-    k = min(k, len(cents))
-    dim = len(cents[0])
-    n_tasks = pts.rdd.getNumPartitions()
-
-    for _ in range(iters):
-        C = np.array(cents, dtype=np.float64)
-        check_exact_blas(
-            float(np.abs(C).max(initial=0.0)), dim,
-            "ann_portable._train_centroids_fast centroids", factor=4)
-        cn = (C * C).sum(axis=1)
-
-        def _partials(batches):
-            sums = np.zeros((k, dim), dtype=np.int64)
-            cnts = np.zeros(k, dtype=np.int64)
-            for pdf in batches:
-                Mi = np.stack(pdf["v"].to_numpy()).astype(np.int64)
-                check_exact_blas(
-                    float(np.abs(Mi).max(initial=0)), dim,
-                    "ann_portable._train_centroids_fast batch", factor=4)
-                M = Mi.astype(np.float64)
-                d = ((M * M).sum(axis=1)[:, None]
-                     - 2.0 * (M @ C.T) + cn[None, :])
-                a = np.argmin(d, axis=1)
-                np.add.at(sums, a, Mi)
-                np.add.at(cnts, a, 1)
-            rows = [
-                (cid, [int(x) for x in sums[cid]], int(cnts[cid]))
-                for cid in range(k) if cnts[cid]
-            ]
-            yield pd.DataFrame(rows, columns=["cid", "s", "n"])
-
-        # collect the per-task partials (≤ k rows per task, each an
-        # array of dim longs) and merge in the driver — int64 addition
-        # is exact and order-independent, so this equals the former
-        # groupBy+sum while skipping one shuffle stage per Lloyd
-        # iteration (the trainings are job-latency-bound). Above
-        # _LLOYD_MERGE_THRESHOLD scan tasks the collect would grow
-        # linearly with task count (tasks×k×dim longs), so a bounded
-        # two-level fold caps it at _LLOYD_MERGE_TASKS×k rows first.
-        parts = _bounded_partials(
-            pts.mapInPandas(_partials, "cid int, s array<long>, n long"),
-            n_tasks, ["cid"], "cid int, s array<long>, n long").collect()
-        acc_s: dict[int, list] = {}
-        acc_n: dict[int, int] = {}
-        for r in parts:
-            cid = r["cid"]
-            if cid in acc_n:
-                acc_n[cid] += r["n"]
-                sl = acc_s[cid]
-                for i, v in enumerate(r["s"]):
-                    sl[i] += v
-            else:
-                acc_n[cid] = r["n"]
-                acc_s[cid] = list(r["s"])
-        new_cents = []
-        for cid in range(k):
-            if cid in acc_n:
-                # floor(sum/count) in double — the engines' exact rule
-                new_cents.append([
-                    int(np.floor(float(s) / float(acc_n[cid])))
-                    for s in acc_s[cid]
-                ])
-            else:
-                new_cents.append(cents[cid])  # empty-cluster carry
-        cents = new_cents
-    return cents
-
-
-def _train_centroids_multi(
-    pts: DataFrame,
-    id_col: str,
-    *,
-    k: int,
-    iters: int,
-    specs: list[tuple[int, int, str]],
-) -> list[list[list[int]]]:
-    """Train ALL of a PQ family's sub-codebooks in LOCKSTEP — one
-    combined seed job plus ONE combined partial-sum job per Lloyd
-    iteration, instead of ``m`` independent chains of
-    :func:`_train_centroids_fast` (even submitted concurrently, m
-    chains pay m× the scheduler/task overhead per iteration; the
-    gates' trainings are job-overhead-bound, not data-bound).
-
-    ``specs`` is ``[(offset, width, salt), ...]`` — 1-based
-    ``F.slice`` windows of the quantized vector column ``v`` plus the
-    per-book seed salt. Each book's math is UNCHANGED from the
-    single-book trainer (same md5 seed ranking over the FULL frame,
-    same exact integer argmin with lowest-cid ties, same
-    ``floor(sum/count)`` updates, same empty-cluster carry), so the
-    output is bit-identical per book — pinned by a unit test against
-    per-slice :func:`_train_centroids_fast` calls.
-
-    Scale shape: identical to the single-book trainer — per iteration
-    one narrow corpus scan whose output is Σ_j k·width_j partial-sum
-    rows (metadata), never a row of the corpus shuffled."""
+    Scale shape: per iteration one narrow ``mapInPandas`` scan emitting
+    ≤ Σ_j k·width_j partial-sum values per task, merged in the driver
+    (above ``_LLOYD_MERGE_THRESHOLD`` tasks, folded first to at most
+    ``_LLOYD_MERGE_TASKS``×Σk rows); no corpus row is ever shuffled.
+    The k×dim centroid state lives on the driver between iterations —
+    the metadata every caller collects at the end anyway."""
     import numpy as np
     import pandas as pd
 
@@ -355,28 +235,27 @@ def _train_centroids_multi(
     if m == 0:
         return []
 
-    def _hash(salt: str) -> Column:
-        return F.conv(
+    # ONE seed job: union of the per-book TakeOrdered branches; rows
+    # re-sorted driver-side by the same (hash, id) key each branch was
+    # ordered by, so book-local seed ORDER (= cid assignment) is the
+    # SQL chain's ROW_NUMBER order.
+    seed_branches = None
+    for j, (off, w, salt) in enumerate(specs):
+        h = F.conv(
             F.substring(
                 F.md5(F.concat(F.col(id_col).cast("string"),
                                F.lit(salt))),
                 1, 15),
             16, 10,
         ).cast("long")
-
-    # ONE seed job: union of the per-book TakeOrdered branches; rows
-    # re-sorted driver-side by the same (hash, id) key each branch was
-    # ordered by, so book-local seed ORDER (= cid assignment) matches
-    # the single-book trainer exactly.
-    seed_branches = None
-    for j, (off, w, salt) in enumerate(specs):
         br = (
-            pts.withColumn("__h", _hash(salt))
+            pts.withColumn("__h", h)
             .orderBy("__h", id_col).limit(k)
             .select(
                 F.lit(j).alias("__b"), "__h",
                 F.col(id_col).alias("__id"),
-                F.slice("v", off, w).alias("v"))
+                (F.col("v") if w is None
+                 else F.slice("v", off, w)).alias("v"))
         )
         seed_branches = br if seed_branches is None else \
             seed_branches.unionByName(br)
@@ -392,7 +271,8 @@ def _train_centroids_multi(
     if all(not b for b in books):
         return books
 
-    widths = [w for _, w, _ in specs]
+    widths = [len(b[0]) for b in books]
+    offs = [off for off, _, _ in specs]
     n_tasks = pts.rdd.getNumPartitions()
     for _ in range(iters):
         Cs, cns = [], []
@@ -400,8 +280,7 @@ def _train_centroids_multi(
             C = np.array(books[j], dtype=np.float64)
             check_exact_blas(
                 float(np.abs(C).max(initial=0.0)), widths[j],
-                "ann_portable._train_centroids_multi centroids",
-                factor=4)
+                "ann_portable._train_centroids centroids", factor=4)
             Cs.append(C)
             cns.append((C * C).sum(axis=1))
 
@@ -411,12 +290,11 @@ def _train_centroids_multi(
             cnts = [np.zeros(ks[j], dtype=np.int64) for j in range(m)]
             for pdf in batches:
                 Mfull = np.stack(pdf["v"].to_numpy()).astype(np.int64)
-                for j, (off, w, _salt) in enumerate(specs):
-                    Mi = Mfull[:, off - 1:off - 1 + w]
+                for j in range(m):
+                    Mi = Mfull[:, offs[j] - 1:offs[j] - 1 + widths[j]]
                     check_exact_blas(
-                        float(np.abs(Mi).max(initial=0)), w,
-                        "ann_portable._train_centroids_multi batch",
-                        factor=4)
+                        float(np.abs(Mi).max(initial=0)), widths[j],
+                        "ann_portable._train_centroids batch", factor=4)
                     M = Mi.astype(np.float64)
                     d = ((M * M).sum(axis=1)[:, None]
                          - 2.0 * (M @ Cs[j].T) + cns[j][None, :])
@@ -431,11 +309,13 @@ def _train_centroids_multi(
             ]
             yield pd.DataFrame(rows, columns=["b", "cid", "s", "n"])
 
-        # per-task partials collected (≤ Σ_j k rows per task, arrays
-        # of width_j longs) and merged in the driver — exact int64
-        # algebra, one shuffle stage fewer per Lloyd iteration (same
-        # rationale and the same bounded two-level fold at high task
-        # counts as the single-book trainer above)
+        # per-task partials (≤ Σ_j k rows per task, arrays of width_j
+        # longs) are collected and merged in the driver: int64 addition
+        # is exact and order-independent, so this equals a groupBy+sum
+        # while skipping one shuffle stage per iteration. Above
+        # _LLOYD_MERGE_THRESHOLD scan tasks the collect would grow
+        # linearly with task count, so a bounded two-level fold caps it
+        # at _LLOYD_MERGE_TASKS×Σk rows first.
         parts = _bounded_partials(
             pts.mapInPandas(
                 _partials, "b int, cid int, s array<long>, n long"),
@@ -457,13 +337,14 @@ def _train_centroids_multi(
             new_cents = []
             for cid in range(ks[j]):
                 if cid in acc_n[j]:
+                    # floor(sum/count) in double — the engines' exact rule
                     n = acc_n[j][cid]
                     new_cents.append([
                         int(np.floor(float(s) / float(n)))
                         for s in acc_s[j][cid]
                     ])
                 else:
-                    new_cents.append(books[j][cid])
+                    new_cents.append(books[j][cid])  # empty-cluster carry
             books[j] = new_cents
     return books
 
@@ -494,8 +375,8 @@ def ivf_topk_fixed(
                          f"{n_probe}/{n_cells}")
     pts = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
-    cmatrix = _lit_lmatrix(_train_centroids_fast(
-        pts, id_col, k=n_cells, iters=iters))
+    cmatrix = _lit_lmatrix(_train_centroids(
+        pts, id_col, k=n_cells, iters=iters)[0])
 
     corpus = pts.withColumn("cell", _argmin_cell(F.col("v"), cmatrix))
     probes = (
@@ -556,7 +437,7 @@ def pq_topk_fixed(
     # corpus scan — train them in LOCKSTEP (one seed job + one
     # partial-sum job per iteration for ALL books; bit-identical per
     # book to m separate chains)
-    books = [_lit_lmatrix(b) for b in _train_centroids_multi(
+    books = [_lit_lmatrix(b) for b in _train_centroids(
         pts, id_col, k=k_codes, iters=iters,
         specs=[(j * sub + 1, sub, f":{j}") for j in range(m)])]
 
@@ -661,8 +542,8 @@ def ivfpq_topk_fixed(
     sub = dims // m
     pts = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
-    cmatrix = _lit_lmatrix(_train_centroids_fast(
-        pts, id_col, k=n_cells, iters=iters))
+    cmatrix = _lit_lmatrix(_train_centroids(
+        pts, id_col, k=n_cells, iters=iters)[0])
 
     asg = (
         pts.withColumn("cell", _argmin_cell(F.col("v"), cmatrix))
@@ -687,7 +568,7 @@ def ivfpq_topk_fixed(
     # assignments (one seed job + one partial-sum job per iteration
     # for ALL books; bit-identical per book to m separate chains)
     res = asg.select(id_col, F.col("r").alias("v"))
-    books = [_lit_lmatrix(b) for b in _train_centroids_multi(
+    books = [_lit_lmatrix(b) for b in _train_centroids(
         res, id_col, k=k_codes, iters=iters,
         specs=[(j * sub + 1, sub, f":{j}") for j in range(m)])]
 

@@ -38,7 +38,7 @@ relative so renormalization is a consumer choice. Pinned by tests.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from pandas_rust_algos_spark import cachelife
 
@@ -190,8 +190,7 @@ def pagerank_fixed(
         e.withColumn(
             "deg",
             F.count(F.lit(1)).over(
-                __import__("pyspark.sql", fromlist=["Window"])
-                .Window.partitionBy("src")),
+                Window.partitionBy("src")),
         )
         .repartition("dst")
         .persist(StorageLevel.MEMORY_AND_DISK)

@@ -33,11 +33,13 @@ corpus bucketing (curriculum bins, dedup blocking, stratification)
 where "same clusters on every engine, every retry, every cluster
 size" is the requirement.
 
-Scale shape (per iteration): one broadcast of the k×dim centroid
-table into a crossJoin + row_number argmin (traffic ∝ rows·k, the
-Lloyd cost), one map-side-combined (cluster, dim) sum shuffle
-(≤ k·dim rows out), centroids localCheckpoint'd so the plan does not
-grow with iterations. No driver collect anywhere.
+Scale shape: training is the engine's one Lloyd trainer,
+:func:`ann_portable._train_centroids` — one seed job, then per
+iteration one narrow ``mapInPandas`` partial-sum pass (≤ k·dim values
+per task, merged in the driver), with the k×dim centroid state kept on
+the driver. The final assignment is a zero-shuffle map over the
+trained centroids as a literal. The DuckDB CTE chain
+(:func:`sql_kmeans_fixed_ctes`) is the independent reference.
 
 Reference scope: no clustering surface exists in the reference
 (SURVEY §2.3) — driver-brief extension.
@@ -45,13 +47,12 @@ Reference scope: no clustering surface exists in the reference
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "check_exact_blas",
     "kmeans_fixed",
-    "kmeans_fixed_centroids",
     "sql_kmeans_fixed",
     "sql_kmeans_fixed_ctes",
 ]
@@ -92,23 +93,6 @@ def check_exact_blas(max_abs: float, dim: int, where: str,
         )
 
 
-def _assign(pts: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Exact-integer argmin assignment: ``(id, v, cid, dist_sq)``."""
-    d = F.aggregate(
-        F.zip_with("v", "c", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    wa = Window.partitionBy(id_col).orderBy("d", "cid")
-    return (
-        pts.crossJoin(F.broadcast(cents))
-        .withColumn("d", d)
-        .withColumn("__rn", F.row_number().over(wa))
-        .where(F.col("__rn") == 1)
-        .select(id_col, "v", "cid", F.col("d").alias("dist_sq"))
-    )
-
-
 def kmeans_fixed(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -123,31 +107,25 @@ def kmeans_fixed(
     which pins the final centroids through the hash, not just the
     labels.
 
-    r12 shape (guide §2.4 — remove shuffles outright): training runs
-    through :func:`ann_portable._train_centroids_fast` (BIT-IDENTICAL
-    to :func:`_fixed_centroids` — same seeds, distances, tie rule,
-    update — pinned by tests/test_similarity.py), whose per-iteration
-    cost is one narrow scan emitting k×dim integer partial-sum rows;
-    the final assignment is a zero-shuffle ``array_min`` expression
-    over the trained centroid literal — the per-iteration rows×k
-    ``crossJoin`` + per-id window SORT-SHUFFLE of the previous
-    DataFrame chain never runs. Centroid state (k×dim longs) is
-    metadata-sized driver state, the same class as the centroid
-    collect every caller did at the end anyway."""
+    Training runs through :func:`ann_portable._train_centroids` with
+    one whole-vector book (bit-identical to
+    :func:`sql_kmeans_fixed_ctes`, pinned by
+    tests/test_similarity.py); the final assignment is a zero-shuffle
+    ``array_min`` expression over the trained centroid literal."""
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1 and iters >= 0, got {k}/{iters}")
     from pandas_rust_algos_spark.operators.ann_portable import (
         _lit_lmatrix,
-        _train_centroids_fast,
+        _train_centroids,
     )
 
     pts = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
-    cents = _train_centroids_fast(pts, id_col, k=k, iters=iters)
+    cents = _train_centroids(pts, id_col, k=k, iters=iters)[0]
     cmat = _lit_lmatrix(cents)
     # exact-integer argmin with the (d, cid) tie rule: array_min over
-    # structs compares d first, then cid — identical to the window
-    # ``orderBy("d", "cid")`` rank-1 row of :func:`_assign`
+    # structs compares d first, then cid — the SQL chain's
+    # ``ORDER BY d, cid`` rank-1 row
     best = F.array_min(
         F.transform(
             cmat,
@@ -166,93 +144,6 @@ def kmeans_fixed(
         best["cid"].alias("cluster"),
         best["d"].alias("dist_sq"),
     )
-
-
-def kmeans_fixed_centroids(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    *,
-    k: int = 4,
-    iters: int = 2,
-    salt: str = "",
-) -> DataFrame:
-    """The CENTROIDS of :func:`kmeans_fixed` — ``(cid, c)`` with ``c``
-    an ``array<long>`` on the micro-unit grid. This is the reusable
-    quantizer-training half: the portable IVF/PQ ANN twins
-    (``operators/ann_portable.py``) derive their coarse centroids and
-    sub-codebooks from it, with ``salt`` decorrelating the md5 seed
-    rows across independent trainings (PQ subspaces)."""
-    if k < 1 or iters < 0:
-        raise ValueError(f"need k >= 1 and iters >= 0, got {k}/{iters}")
-    pts = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
-    return _fixed_centroids(pts, id_col, k=k, iters=iters, salt=salt)
-
-
-def _fixed_centroids(
-    pts: DataFrame,
-    id_col: str,
-    *,
-    k: int,
-    iters: int,
-    salt: str = "",
-    checkpoint: bool = True,
-) -> DataFrame:
-    """Lloyd iterations over pre-quantized ``(id, v)`` points; returns
-    the final integer centroids ``(cid, c)``.
-
-    ``checkpoint=True`` (the default) truncates lineage per iteration
-    so the plan stays O(1) in ``iters`` — right for many iterations or
-    downstream reuse. Callers that immediately collect a SHORT chain
-    (the portable ANN quantizers: 2 iterations, metadata-sized result)
-    pass ``checkpoint=False`` to fold the whole chain into ONE job
-    instead of 2·iters+1 eagerly-materialized ones — the per-job fixed
-    cost dominates at that shape."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))),
-            1, 15),
-        16, 10,
-    ).cast("long")
-    seeds = (
-        pts.withColumn("__h", h)
-        .orderBy("__h", id_col)
-        .limit(k)
-    )
-    wseed = Window.orderBy("__h", id_col)
-    cents = seeds.select(
-        (F.row_number().over(wseed) - 1).alias("cid"),
-        F.col("v").alias("c"),
-    )
-    if checkpoint:
-        cents = cents.localCheckpoint(eager=True)
-    for _ in range(iters):
-        asg = _assign(pts, cents, id_col)
-        sums = (
-            asg.select("cid", F.posexplode("v").alias("i", "x"))
-            .groupBy("cid", "i")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
-        # floor(sum/count): sum is an exact BIGINT; the division is
-        # exact in double while |sum| < 2^53 (micro-unit coordinates
-        # keep it there at any realistic scale), and floor re-lands on
-        # the integer grid — state stays engine-exact
-        upd = sums.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "s", "n"))),
-                lambda t: F.floor(
-                    t["s"].cast("double") / t["n"].cast("double")
-                ).cast("long"),
-            ).alias("c_new")
-        )
-        cents = (
-            cents.join(upd, "cid", "left")
-            .select("cid", F.coalesce("c_new", "c").alias("c"))
-        )
-        if checkpoint:
-            cents = cents.localCheckpoint(eager=True)
-    return cents
 
 
 SQL_DIST = ("LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(p.v) + 1), "

@@ -378,106 +378,125 @@ def test_hard_negative_topk(spark, emb, queries_with_label=None):
         assert got == want, f"query {qi}"
 
 
-def test_train_centroids_fast_matches_dataframe_lloyd(spark, emb):
-    """The driver-coordinated exact-BLAS Lloyd twin produces BIT-
-    IDENTICAL centroids to the pure-DataFrame kmeans._fixed_centroids
-    for several (k, iters, salt) shapes — the property that keeps the
-    IVF/PQ portable gates on the same oracle."""
-    from pyspark.sql import functions as SF
-
-    from pandas_rust_algos_spark.operators.ann_portable import (
-        _collect_centroids,
-        _train_centroids_fast,
-    )
-    from pandas_rust_algos_spark.operators.kmeans import (
-        _fixed_centroids,
-        _quantize,
-    )
-
-    pts = emb.select(
-        SF.col("vec_id"), _quantize(SF.col("embedding")).alias("v"))
-    for k, iters, salt in [(4, 2, ""), (8, 1, ""), (3, 3, ":1")]:
-        want = _collect_centroids(_fixed_centroids(
-            pts, "vec_id", k=k, iters=iters, salt=salt,
-            checkpoint=False))
-        got = _train_centroids_fast(
-            pts, "vec_id", k=k, iters=iters, salt=salt)
-        assert got == want, (k, iters, salt)
-        # partitioning independence: with >1 partition every task emits
-        # its own partial-sum rows, exercising the driver-side
-        # multi-partial merge (int64 addition is order-independent, so
-        # the centroids must be bit-identical to the 1-partition run)
-        got_mp = _train_centroids_fast(
-            pts.repartition(7), "vec_id", k=k, iters=iters, salt=salt)
-        assert got_mp == want, ("repartitioned", k, iters, salt)
-
-
-def test_train_centroids_multi_matches_per_slice_fast(spark, emb):
-    """The lockstep multi-book trainer is BIT-IDENTICAL, book by book,
-    to m independent per-slice _train_centroids_fast chains — the
-    property that lets the PQ/IVFPQ gates train every sub-codebook in
-    one combined job per iteration without touching their oracles.
-    Covers uneven clamps (k > points) and a non-uniform slice set."""
-    from pyspark.sql import functions as SF
-
-    from pandas_rust_algos_spark.operators.ann_portable import (
-        _train_centroids_fast,
-        _train_centroids_multi,
-    )
+def _quantized(emb):
     from pandas_rust_algos_spark.operators.kmeans import _quantize
 
-    pts = emb.select(
-        SF.col("vec_id"), _quantize(SF.col("embedding")).alias("v"))
+    return emb.select(
+        F.col("vec_id"), _quantize(F.col("embedding")).alias("v"))
+
+
+def _duck_book(duck, *, k, iters, off=1, w=None, salt="", pred="TRUE"):
+    """One codebook from the DuckDB Lloyd CTE chain — the independent
+    reference every Spark-side trainer result must equal bit for bit.
+    ``v[off:off+w-1]`` is the 1-based inclusive slice of ``F.slice``."""
+    from pandas_rust_algos_spark.operators.kmeans import (
+        sql_kmeans_fixed_ctes,
+        sql_quantize,
+    )
+
+    v = "q.v" if w is None else f"q.v[{off}:{off + w - 1}]"
+    ctes, fin = sql_kmeans_fixed_ctes(
+        "pts", "vec_id", k=k, iters=iters, salt=salt)
+    sql = f"""
+    WITH q AS (
+      SELECT vec_id, {sql_quantize('embedding')} AS v
+      FROM embeddings WHERE {pred}
+    ), pts AS (SELECT vec_id, {v} AS v FROM q), {', '.join(ctes)}
+    SELECT c FROM {fin} ORDER BY cid"""
+    return [[int(x) for x in r[0]] for r in duck.execute(sql).fetchall()]
+
+
+def test_train_centroids_matches_duckdb_lloyd(spark, emb, duck):
+    """The one Lloyd trainer produces BIT-IDENTICAL centroids to the
+    DuckDB CTE chain for several (k, iters, salt) shapes — the property
+    that keeps kmeans_fixed and the IVF/PQ portable gates on their
+    oracles — on one partition and on seven (every task then emits its
+    own partial sums, exercising the driver-side merge)."""
+    from pandas_rust_algos_spark.operators.ann_portable import (
+        _train_centroids,
+    )
+
+    pts = _quantized(emb)
+    for k, iters, salt in [(4, 2, ""), (8, 1, ""), (3, 3, ":1")]:
+        want = _duck_book(duck, k=k, iters=iters, salt=salt)
+        specs = ((1, None, salt),)
+        got = _train_centroids(pts, "vec_id", k=k, iters=iters,
+                               specs=specs)
+        assert got == [want], (k, iters, salt)
+        got_mp = _train_centroids(pts.repartition(7), "vec_id", k=k,
+                                  iters=iters, specs=specs)
+        assert got_mp == [want], ("repartitioned", k, iters, salt)
+
+
+def test_train_centroids_sub_books_match_duckdb(spark, emb, duck):
+    """Lockstep sub-books are BIT-IDENTICAL, book by book, to one
+    DuckDB chain per salted slice — the property that lets the
+    PQ/IVFPQ gates train every sub-codebook in one combined job per
+    iteration. Covers repartitioning, uneven clamps (k > points) and
+    mixed slice widths."""
+    from pandas_rust_algos_spark.operators.ann_portable import (
+        _train_centroids,
+    )
+
+    pts = _quantized(emb)
     dims = len(pts.first()["v"])
     sub = dims // 4
     specs = [(j * sub + 1, sub, f":{j}") for j in range(4)]
-    got = _train_centroids_multi(pts, "vec_id", k=8, iters=2,
-                                 specs=specs)
-    for j, (off, w, salt) in enumerate(specs):
-        want = _train_centroids_fast(
-            pts.select("vec_id", SF.slice("v", off, w).alias("v")),
-            "vec_id", k=8, iters=2, salt=salt)
-        assert got[j] == want, j
-    # partitioning independence (driver-side multi-partial merge):
-    # a multi-partition frame must train bit-identical books
-    got_mp = _train_centroids_multi(pts.repartition(7), "vec_id", k=8,
-                                    iters=2, specs=specs)
+    got = _train_centroids(pts, "vec_id", k=8, iters=2, specs=specs)
+    assert got == [
+        _duck_book(duck, k=8, iters=2, off=off, w=w, salt=salt)
+        for off, w, salt in specs]
+    got_mp = _train_centroids(pts.repartition(7), "vec_id", k=8,
+                              iters=2, specs=specs)
     assert got_mp == got
 
     # clamp path: fewer points than k, mixed widths
-    tiny = pts.where(SF.col("vec_id") < 3)
+    tiny = pts.where(F.col("vec_id") < 3)
     specs2 = [(1, dims, ""), (1, sub, ":x")]
-    got2 = _train_centroids_multi(tiny, "vec_id", k=8, iters=2,
-                                  specs=specs2)
-    for j, (off, w, salt) in enumerate(specs2):
-        want = _train_centroids_fast(
-            tiny.select("vec_id", SF.slice("v", off, w).alias("v")),
-            "vec_id", k=8, iters=2, salt=salt)
-        assert got2[j] == want, j
+    got2 = _train_centroids(tiny, "vec_id", k=8, iters=2, specs=specs2)
+    assert got2 == [
+        _duck_book(duck, k=8, iters=2, off=off, w=w, salt=salt,
+                   pred="vec_id < 3")
+        for off, w, salt in specs2]
 
 
-def test_train_centroids_fast_fewer_points_than_k(spark, emb):
-    """k > corpus size must clamp to the seed count and still match
-    kmeans._fixed_centroids (it simply has fewer seed rows) — before
-    the r8 fix the update loop indexed past the seed list."""
-    from pyspark.sql import functions as SF
-
+def test_train_centroids_fewer_points_than_k(spark, emb, duck):
+    """k > corpus size clamps to the seed count and still matches the
+    DuckDB chain (which simply has fewer seed rows) — an unclamped
+    update loop would index past the seed list."""
     from pandas_rust_algos_spark.operators.ann_portable import (
-        _collect_centroids,
-        _train_centroids_fast,
-    )
-    from pandas_rust_algos_spark.operators.kmeans import (
-        _fixed_centroids,
-        _quantize,
+        _train_centroids,
     )
 
-    pts = emb.where(SF.col("vec_id") < 3).select(
-        SF.col("vec_id"), _quantize(SF.col("embedding")).alias("v"))
-    want = _collect_centroids(_fixed_centroids(
-        pts, "vec_id", k=8, iters=2, checkpoint=False))
-    got = _train_centroids_fast(pts, "vec_id", k=8, iters=2)
-    assert len(got) == 3
-    assert got == want
+    pts = _quantized(emb).where(F.col("vec_id") < 3)
+    got = _train_centroids(pts, "vec_id", k=8, iters=2)
+    assert len(got[0]) == 3
+    assert got == [_duck_book(duck, k=8, iters=2, pred="vec_id < 3")]
+
+
+def test_train_centroids_job_count(spark, emb):
+    """One seed job plus ONE partial-sum job per Lloyd iteration, for a
+    single whole-vector book and for four lockstep sub-books alike. A
+    width-probe job or per-book chains would break the count."""
+    from pandas_rust_algos_spark.operators.ann_portable import (
+        _train_centroids,
+    )
+
+    sc = spark.sparkContext
+    pts = _quantized(emb)
+    sub = len(pts.first()["v"]) // 4
+    four = tuple((j * sub + 1, sub, f":{j}") for j in range(4))
+    for iters in (0, 2):
+        for specs in (((1, None, ""),), four):
+            group = f"lloyd-jobs-{iters}-{len(specs)}"
+            sc.setJobGroup(group, "trainer job-count pin")
+            try:
+                _train_centroids(pts, "vec_id", k=4, iters=iters,
+                                 specs=specs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert len(jobs) == 1 + iters, (iters, len(specs), jobs)
 
 
 def test_pq_fixed_dims_probe_skips_null_rows(spark):
@@ -579,27 +598,23 @@ def test_ann_recall_report_bounds(spark, emb, queries):
 
 
 def test_lloyd_two_level_merge_bounds_driver_collect(spark, emb, monkeypatch):
-    """Above _LLOYD_MERGE_THRESHOLD scan tasks the trainers fold their
+    """Above _LLOYD_MERGE_THRESHOLD scan tasks the trainer folds its
     per-task partials through a bounded repartition before the driver
     collect (r12 VERDICT next-#4): the collected frame has at most
     _LLOYD_MERGE_TASKS partitions — independent of the input task
     count — and the trained centroids stay BIT-IDENTICAL to the
     direct-merge path (exact int64 algebra is associative)."""
-    from pyspark.sql import functions as SF
-
     from pandas_rust_algos_spark.operators import ann_portable as ap
-    from pandas_rust_algos_spark.operators.kmeans import _quantize
 
-    pts = emb.select(
-        SF.col("vec_id"), _quantize(SF.col("embedding")).alias("v"))
-    want = ap._train_centroids_fast(pts, "vec_id", k=5, iters=2)
+    pts = _quantized(emb)
+    want = ap._train_centroids(pts, "vec_id", k=5, iters=2)
 
     # force the two-level path at gate scale: threshold below the
     # high-partition fixture's task count, tiny bounded task count
     monkeypatch.setattr(ap, "_LLOYD_MERGE_THRESHOLD", 4)
     monkeypatch.setattr(ap, "_LLOYD_MERGE_TASKS", 3)
     hi = pts.repartition(16)
-    got = ap._train_centroids_fast(hi, "vec_id", k=5, iters=2)
+    got = ap._train_centroids(hi, "vec_id", k=5, iters=2)
     assert got == want
 
     # the fold itself bounds the collected frame's partition count
@@ -620,17 +635,14 @@ def test_lloyd_two_level_merge_bounds_driver_collect(spark, emb, monkeypatch):
     assert len(rows) <= 3
     direct = parts.collect()
     assert sum(r["n"] for r in rows) == sum(r["n"] for r in direct)
-    assert (sorted(sum(r["s"][0] for r in rows if r["cid"] == 0)
-                   for _ in [0])
-            == sorted(sum(r["s"][0] for r in direct if r["cid"] == 0)
-                      for _ in [0]))
+    assert (sum(r["s"][0] for r in rows if r["cid"] == 0)
+            == sum(r["s"][0] for r in direct if r["cid"] == 0))
 
-    # multi-book trainer takes the same path
+    # lockstep sub-books take the same path
     dims = len(pts.first()["v"])
     sub = dims // 2
     specs = [(1, sub, ":0"), (sub + 1, sub, ":1")]
-    want_m = ap._train_centroids_multi(pts, "vec_id", k=4, iters=2,
-                                       specs=specs)
-    got_m = ap._train_centroids_multi(hi, "vec_id", k=4, iters=2,
-                                      specs=specs)
+    want_m = ap._train_centroids(pts, "vec_id", k=4, iters=2,
+                                 specs=specs)
+    got_m = ap._train_centroids(hi, "vec_id", k=4, iters=2, specs=specs)
     assert got_m == want_m
