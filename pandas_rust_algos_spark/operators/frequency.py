@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandas_rust_algos_spark import cachelife
+from pandas_rust_algos_spark.operators import cells
 
 __all__ = [
     "cms_cells",
@@ -108,14 +109,7 @@ def cms_sketch(
     sketch is insertion-order-INDEPENDENT — with ``portable`` hashing
     it is bit-deterministic across engines, partitionings, and
     retries, which is what makes it fully SQL-oracle-able."""
-    if width < 1 or depth < 1:
-        raise ValueError(f"width/depth must be >= 1, got {width}/{depth}")
-    return (
-        df.where(F.col(key).isNotNull())
-        .select(F.explode(cms_cells(key, width, depth, hash_mode)).alias("c"))
-        .groupBy(F.col("c.d").alias("d"), F.col("c.slot").alias("slot"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return cells.build(df, [], _cms_sketch(key, width, depth, hash_mode))
 
 
 def cms_cells(key: str, width: int, depth: int,
@@ -123,6 +117,8 @@ def cms_cells(key: str, width: int, depth: int,
     """The ``depth`` (d, slot) sketch cells of one key as an array
     expression — shared by the batch sketch, the point-query probes,
     and the streaming windowed sketch."""
+    if width < 1 or depth < 1:
+        raise ValueError(f"width/depth must be >= 1, got {width}/{depth}")
     kstr = F.col(key).cast("string")
     return F.array(*[
         F.struct(
@@ -134,6 +130,16 @@ def cms_cells(key: str, width: int, depth: int,
     ])
 
 
+def _cms_sketch(key: str, width: int, depth: int,
+                hash_mode: str) -> cells.Cells:
+    """CMS as cells: each non-NULL key counts once in each of its
+    ``depth`` (d, slot) cells."""
+    return cells.Cells(
+        F.col(key).isNotNull(), ("d", "slot"),
+        (F.inline(cms_cells(key, width, depth, hash_mode)),),
+        F.count(F.lit(1)).alias("cnt"))
+
+
 def cms_merge(*sketches: DataFrame) -> DataFrame:
     """Merge count-min sketches cell-wise (sum per ``(d, slot)``) —
     EXACT by construction: counting is distributive, so the merge of
@@ -143,12 +149,7 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
     fold it into the running sketch — ≤ depth×width rows of state,
     never a rescan of history. All inputs must share width/depth/
     hash_mode (cells only line up within one geometry)."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy("d", "slot").agg(F.sum("cnt").alias("cnt"))
+    return cells.merge(sketches, F.sum)
 
 
 def cms_estimate(
@@ -165,18 +166,8 @@ def cms_estimate(
     — the count-min estimator. The sketch side is ≤ depth×width rows
     (broadcast-sized by construction); each key probes ``depth``
     cells, so the join traffic is O(|keys|·depth), never O(data)."""
-    kstr = F.col(key).cast("string")
     probes = keys.select(
-        F.col(key),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(d).alias("d"),
-                F.pmod(_cms_hash(d, kstr, hash_mode), F.lit(width))
-                .cast("int").alias("slot"),
-            )
-            for d in range(depth)
-        ])).alias("c"),
-    ).select(key, F.col("c.d").alias("d"), F.col("c.slot").alias("slot"))
+        F.col(key), F.inline(cms_cells(key, width, depth, hash_mode)))
     return (
         probes.join(F.broadcast(sketch), ["d", "slot"], "left")
         .groupBy(key)
@@ -248,13 +239,17 @@ def hll_registers(
     max-mergeable: registers built over disjoint data slices combine
     with :func:`hll_merge` into EXACTLY the registers of the full
     scan (max is associative/commutative/idempotent)."""
+    return cells.build(df, [group], _hll_sketch(col, m, hash_mode))
+
+
+def _hll_sketch(col: str, m: int, hash_mode: str) -> cells.Cells:
+    """HLL as cells: each non-NULL value lands in one bucket, whose
+    register folds ``max(rho)``."""
     bucket, rho = hll_bucket_rho(F.col(col), m, hash_mode)
-    return (
-        df.where(F.col(col).isNotNull())
-        .select(F.col(group), bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy(group, "bucket")
-        .agg(F.max("rho").alias("mj"))
-    )
+    return cells.Cells(
+        F.col(col).isNotNull(), ("bucket",),
+        (bucket.alias("bucket"), rho.alias("rho")),
+        F.max("rho").alias("mj"))
 
 
 def hll_bucket_rho(col, m: int, hash_mode: str):
@@ -282,13 +277,7 @@ def hll_merge(*registers: DataFrame) -> DataFrame:
     the concatenated data, so estimates through the merge are
     bit-identical to a full rescan. Same 100 TB maintenance shape as
     :func:`cms_merge`, with ≤ m rows of state per group."""
-    if not registers:
-        raise ValueError("hll_merge needs at least one register table")
-    group = registers[0].columns[0]
-    merged = registers[0]
-    for r in registers[1:]:
-        merged = merged.unionByName(r)
-    return merged.groupBy(group, "bucket").agg(F.max("mj").alias("mj"))
+    return cells.merge(registers, F.max)
 
 
 def hll_estimate(regs: DataFrame, group: str, *, m: int = 64) -> DataFrame:

@@ -46,10 +46,14 @@ is the driver-brief 100 TB extension.
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pandas_rust_algos_spark.operators import cells
 
 __all__ = [
     "hist_sketch",
@@ -62,7 +66,6 @@ __all__ = [
     "sql_hist_sketch_weighted",
     "sql_hist_weighted_quantiles",
     "hist2d_sketch_weighted",
-    "hist2d_merge",
     "hist2d_weighted_corr_cov",
     "sql_hist2d_sketch_weighted",
     "sql_hist2d_weighted_corr_cov",
@@ -87,6 +90,38 @@ def _bin_expr(col, lo: float, hi: float, bins: int):
     return F.greatest(F.lit(0), F.least(F.lit(bins - 1), raw))
 
 
+def _sql_bin(e: str, lo: float, hi: float, bins: int) -> str:
+    """DuckDB twin of :func:`_bin_expr`: same double expression, same
+    clamp."""
+    r = (f"CAST(FLOOR((CAST({e} AS DOUBLE) - {float(lo)}) "
+         f"* {float(bins)} / {float(hi - lo)}) AS BIGINT)")
+    return f"GREATEST(0, LEAST({bins - 1}, {r}))"
+
+
+def _hist_sketch(axes: Sequence[tuple[str, str, float, float, int]],
+                 weight: Column | None = None) -> cells.Cells:
+    """The histogram cells of every form (1-D, weighted, 2-D, windowed),
+    one ``(name, col, lo, hi, bins)`` per axis. Cells fold a row count
+    ``cnt``, or with a ``weight`` its 1e-6 micro-unit BIGINT sum
+    ``wcnt``. A row is kept iff every axis value and the weight are
+    non-NULL and non-NaN (the engines disagree on floor(NaN))."""
+    vals, project = [], []
+    for name, col, lo, hi, bins in axes:
+        _check(lo, hi, bins)
+        vals.append(F.col(col).cast("double"))
+        project.append(_bin_expr(F.col(col), lo, hi, bins).alias(name))
+    fold = F.count(F.lit(1)).alias("cnt")
+    if weight is not None:
+        w = weight.cast("double")
+        vals.append(w)
+        project.append(F.floor(w * F.lit(1e6)).cast("long").alias("__wq"))
+        fold = F.sum("__wq").alias("wcnt")
+    keep = functools.reduce(operator.and_, [
+        c for v in vals for c in (v.isNotNull(), ~F.isnan(v))])
+    return cells.Cells(keep, tuple(a[0] for a in axes), tuple(project),
+                       fold)
+
+
 def hist_sketch(
     df: DataFrame,
     group: str,
@@ -100,34 +135,18 @@ def hist_sketch(
     map-side-combined aggregate: raw values shuffle only as cell ids
     that combine into ≤ bins rows per group per task, the same traffic
     shape as the CMS build."""
-    _check(lo, hi, bins)
-    # NaN is dropped like NULL (it has no place on the value axis) —
-    # and the two engines disagree on floor(NaN)->int, so leaving it
-    # in would diverge from the oracle
-    return (
-        df.where(F.col(col).isNotNull() & ~F.isnan(F.col(col).cast("double")))
-        .select(F.col(group),
-                _bin_expr(F.col(col), lo, hi, bins).alias("bin"))
-        .groupBy(group, "bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return cells.build(
+        df, [group], _hist_sketch([("bin", col, lo, hi, bins)]))
 
 
-def hist_merge(*sketches: DataFrame, cnt_col: str = "cnt") -> DataFrame:
-    """Merge histogram sketches cell-wise (sum per ``(group, bin)``) —
-    EXACT by distributivity, like ``cms_merge``: the merge of
-    per-partition/per-day sketches is byte-identical to the sketch of
-    the concatenated data. All inputs must share (lo, hi, bins).
-    ``cnt_col="wcnt"`` merges WEIGHTED sketches — micro-unit weight
-    sums are BIGINT, so cell-wise SUM stays exact there too."""
-    if not sketches:
-        raise ValueError("hist_merge needs at least one sketch")
-    group = sketches[0].columns[0]
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy(group, "bin").agg(
-        F.sum(cnt_col).alias(cnt_col))
+def hist_merge(*sketches: DataFrame) -> DataFrame:
+    """Merge histogram sketches cell-wise (sum per ``(group, bin)`` or
+    ``(group, binx, biny)``) — EXACT by distributivity, like
+    ``cms_merge``: the merge of per-partition/per-day sketches is
+    byte-identical to the sketch of the concatenated data. All inputs
+    must share the geometry. The state column (``cnt``, or the BIGINT
+    micro-unit ``wcnt`` of weighted sketches) is read off the input."""
+    return cells.merge(sketches, F.sum)
 
 
 def hist_quantiles(
@@ -199,11 +218,9 @@ def sql_hist_sketch(
 ) -> str:
     """DuckDB twin of :func:`hist_sketch`: same double bin expression,
     same clamp."""
-    raw = (f"CAST(FLOOR((CAST({col_expr} AS DOUBLE) - {float(lo)}) "
-           f"* {float(bins)} / {float(hi - lo)}) AS BIGINT)")
     return f"""
     SELECT {group_expr} AS grp,
-           GREATEST(0, LEAST({bins - 1}, {raw})) AS bin,
+           {_sql_bin(col_expr, lo, hi, bins)} AS bin,
            COUNT(*) AS cnt
     FROM {table}
     WHERE {col_expr} IS NOT NULL
@@ -228,21 +245,12 @@ def hist_sketch_weighted(
     bit-for-bit). This is the 100 TB path the exact
     ``group_weighted_quantile`` docstring names: an append-only
     pipeline maintains ≤ ``bins`` rows per group per slice and folds
-    them cell-wise (``hist_merge(cnt_col="wcnt")``) — no within-group
-    sort, no rescan. NA rule matches the exact op (NULL value or NULL
-    weight drops the row); NaN on either axis drops too (the engines
-    disagree on floor(NaN))."""
-    _check(lo, hi, bins)
-    v, w = F.col(col).cast("double"), F.col(weight_col).cast("double")
-    return (
-        df.where(v.isNotNull() & ~F.isnan(v)
-                 & w.isNotNull() & ~F.isnan(w))
-        .select(F.col(group),
-                _bin_expr(F.col(col), lo, hi, bins).alias("bin"),
-                F.floor(w * F.lit(1e6)).cast("long").alias("__wq"))
-        .groupBy(group, "bin")
-        .agg(F.sum("__wq").alias("wcnt"))
-    )
+    them cell-wise (``hist_merge``) — no within-group sort, no rescan.
+    NA rule matches the exact op (NULL value or NULL weight drops the
+    row); NaN on either axis drops too (the engines disagree on
+    floor(NaN))."""
+    return cells.build(df, [group], _hist_sketch(
+        [("bin", col, lo, hi, bins)], F.col(weight_col)))
 
 
 def hist_weighted_quantiles(
@@ -314,11 +322,9 @@ def sql_hist_sketch_weighted(
 ) -> str:
     """DuckDB twin of :func:`hist_sketch_weighted`: same bin
     expression, same micro-unit weight quantization."""
-    raw = (f"CAST(FLOOR((CAST({col_expr} AS DOUBLE) - {float(lo)}) "
-           f"* {float(bins)} / {float(hi - lo)}) AS BIGINT)")
     return f"""
     SELECT {group_expr} AS grp,
-           GREATEST(0, LEAST({bins - 1}, {raw})) AS bin,
+           {_sql_bin(col_expr, lo, hi, bins)} AS bin,
            CAST(SUM(CAST(FLOOR(CAST({weight_expr} AS DOUBLE) * 1e6)
                AS BIGINT)) AS BIGINT) AS wcnt
     FROM {table}
@@ -459,38 +465,9 @@ def hist2d_sketch_weighted(
     (``weighted.group_weighted_corr_cov``): a row contributes iff x
     AND y AND the weight are all non-NULL; NaN on any of the three
     drops too (the engines disagree on floor(NaN))."""
-    _check2d(lox, hix, loy, hiy, binsx, binsy)
-    vx = F.col(x).cast("double")
-    vy = F.col(y).cast("double")
-    w = F.col(weight_col).cast("double")
-    return (
-        df.where(vx.isNotNull() & ~F.isnan(vx)
-                 & vy.isNotNull() & ~F.isnan(vy)
-                 & w.isNotNull() & ~F.isnan(w))
-        .select(F.col(group),
-                _bin_expr(F.col(x), lox, hix, binsx).alias("binx"),
-                _bin_expr(F.col(y), loy, hiy, binsy).alias("biny"),
-                F.floor(w * F.lit(1e6)).cast("long").alias("__wq"))
-        .groupBy(group, "binx", "biny")
-        .agg(F.sum("__wq").alias("wcnt"))
-    )
-
-
-def hist2d_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge 2-D weighted sketches cell-wise (BIGINT sum per
-    ``(group, binx, biny)``) — EXACT by distributivity: the fold of
-    per-slice sketches is byte-identical to the sketch of the
-    concatenated data, so an append-only pipeline maintains a live
-    correlation summary without rescans. All inputs must share
-    (lox, hix, loy, hiy, binsx, binsy)."""
-    if not sketches:
-        raise ValueError("hist2d_merge needs at least one sketch")
-    group = sketches[0].columns[0]
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy(group, "binx", "biny").agg(
-        F.sum("wcnt").alias("wcnt"))
+    return cells.build(df, [group], _hist_sketch(
+        [("binx", x, lox, hix, binsx), ("biny", y, loy, hiy, binsy)],
+        F.col(weight_col)))
 
 
 def hist2d_weighted_corr_cov(
@@ -577,16 +554,10 @@ def sql_hist2d_sketch_weighted(
     """DuckDB twin of :func:`hist2d_sketch_weighted`: same bin
     expressions, same micro-unit quantization, same NA rule."""
     _check2d(lox, hix, loy, hiy, binsx, binsy)
-
-    def raw(e: str, lo: float, hi: float, bins: int) -> str:
-        r = (f"CAST(FLOOR((CAST({e} AS DOUBLE) - {float(lo)}) "
-             f"* {float(bins)} / {float(hi - lo)}) AS BIGINT)")
-        return f"GREATEST(0, LEAST({bins - 1}, {r}))"
-
     return f"""
     SELECT {group_expr} AS grp,
-           {raw(x_expr, lox, hix, binsx)} AS binx,
-           {raw(y_expr, loy, hiy, binsy)} AS biny,
+           {_sql_bin(x_expr, lox, hix, binsx)} AS binx,
+           {_sql_bin(y_expr, loy, hiy, binsy)} AS biny,
            CAST(SUM(CAST(FLOOR(CAST({weight_expr} AS DOUBLE) * 1e6)
                AS BIGINT)) AS BIGINT) AS wcnt
     FROM {table}

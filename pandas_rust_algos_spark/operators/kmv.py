@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pandas_rust_algos_spark.operators import cells
 from pandas_rust_algos_spark.operators.frequency import (
     hash60,
     sql_cms_hash,
@@ -105,18 +106,9 @@ def kmv_merge(*sketches: DataFrame, k: int = 64) -> DataFrame:
     maintenance shape as ``cms_merge``/``hll_merge``: sketch each new
     partition (one scan of the delta), fold into k longs of running
     state per group, never rescan history."""
-    if not sketches:
-        raise ValueError("kmv_merge needs at least one sketch")
-    group = sketches[0].columns[0]
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy(group).agg(
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("hs")))),
-            1, k,
-        ).alias("hs")
-    )
+    return cells.merge(sketches, lambda hs: F.slice(
+        F.array_sort(F.array_distinct(F.flatten(F.collect_list(hs)))),
+        1, k))
 
 
 def _estimate_expr(hs, k: int):

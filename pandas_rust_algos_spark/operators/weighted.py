@@ -535,7 +535,7 @@ def group_weighted_corr_approx(
     family got in r11, extended to the bivariate op (r11 VERDICT
     next-#3): one map-side-combined pass builds ``(group, binx, biny,
     Σ micro-unit weight)`` (≤ binsx·binsy rows per group, folds
-    cell-wise via ``histsketch.hist2d_merge`` without rescans), then
+    cell-wise via ``histsketch.hist_merge`` without rescans), then
     each cell's center stands in for its observations in the exact
     op's moment formulas. Error is bounded by the grid resolution
     (half a cell width per axis per moment), independent of data

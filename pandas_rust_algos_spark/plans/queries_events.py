@@ -647,13 +647,12 @@ def hist_weighted_incremental_merge_q(spark: SparkSession,
     """WEIGHTED histogram-sketch merge, STATE-exact: the same
     base/delta shipdate split as ``hist_incremental_merge``, each
     slice's micro-unit weight sums sketched independently and folded
-    cell-wise (``hist_merge(cnt_col='wcnt')``, BIGINT sums so the
-    fold is exact) — vs the oracle's one-scan full-table weighted
-    sketch. Proves the approximate weighted quantile's maintenance
-    story on real data: an append-only pipeline folds per-slice
-    weighted sketches without rescans and the walked quantiles cannot
-    tell the difference (``operators/histsketch.py:
-    hist_sketch_weighted``)."""
+    cell-wise (``hist_merge``, BIGINT sums so the fold is exact) — vs
+    the oracle's one-scan full-table weighted sketch. Proves the
+    approximate weighted quantile's maintenance story on real data:
+    an append-only pipeline folds per-slice weighted sketches without
+    rescans and the walked quantiles cannot tell the difference
+    (``operators/histsketch.py:hist_sketch_weighted``)."""
     tune(spark)
     from pandas_rust_algos_spark.operators.histsketch import (
         hist_merge, hist_sketch_weighted,
@@ -669,7 +668,6 @@ def hist_weighted_incremental_merge_q(spark: SparkSession,
                              "l_quantity", **_HIST_ARGS),
         hist_sketch_weighted(delta, "l_returnflag", "l_extendedprice",
                              "l_quantity", **_HIST_ARGS),
-        cnt_col="wcnt",
     )
 
 
@@ -697,7 +695,7 @@ def corr_weighted_incremental_merge_q(spark: SparkSession,
     """2-D WEIGHTED histogram-sketch merge, STATE-exact: the same
     base/delta shipdate split as the 1-D weighted gate, each slice's
     (binx, biny) micro-unit weight cells sketched independently and
-    folded cell-wise (``hist2d_merge``, BIGINT sums so the fold is
+    folded cell-wise (``hist_merge``, BIGINT sums so the fold is
     exact) — vs the oracle's one-scan full-table 2-D sketch. Every
     merged cell must hash-match, which proves the approximate
     weighted CORRELATION's maintenance story on real data: an
@@ -708,7 +706,7 @@ def corr_weighted_incremental_merge_q(spark: SparkSession,
     hist2d_sketch_weighted``; r11 VERDICT next-#3)."""
     tune(spark)
     from pandas_rust_algos_spark.operators.histsketch import (
-        hist2d_merge, hist2d_sketch_weighted,
+        hist2d_sketch_weighted, hist_merge,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -716,7 +714,7 @@ def corr_weighted_incremental_merge_q(spark: SparkSession,
     base = li.where(F.col("l_shipdate") < cut)
     delta = li.where(~(F.col("l_shipdate") < cut)
                      | F.col("l_shipdate").isNull())
-    return hist2d_merge(
+    return hist_merge(
         hist2d_sketch_weighted(base, "l_returnflag", "l_discount",
                                "l_tax", "l_quantity", **_H2D_ARGS),
         hist2d_sketch_weighted(delta, "l_returnflag", "l_discount",

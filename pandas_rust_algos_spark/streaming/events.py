@@ -19,32 +19,20 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pandas_rust_algos_spark.operators import cells
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as an unbounded stream (schema taken from the batch file;
-    maxFilesPerTrigger keeps micro-batches bounded).
+    """events as an unbounded stream (:func:`read_table_stream`).
 
     Same TIMESTAMP(NANOS) handling as the batch loader
     (``sources.parquet.load_table``): nanos read as long, rebuilt as a
     truncated microsecond timestamp, so stream and batch agree."""
-    path = os.path.join(sf_dir, "events.parquet")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    schema = spark.read.parquet(path).schema
-    # FileStreamSource requires a *directory* to monitor; the fixture is
-    # a single read-only file, so expose it through a symlink dir (in
-    # production the source is a landing directory / Kafka topic anyway)
-    stream_dir = tempfile.mkdtemp(prefix="events_stream_")
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(path, link)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
+    stream = read_table_stream(spark, sf_dir, "events")
     if dict(stream.dtypes).get("ts") == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
@@ -89,25 +77,11 @@ def cms_windowed(
     windows, and because the sketch is insertion-order-independent the
     drained stream result must EQUAL the batch sketch over the same
     rows — which is what the gate's oracle checks."""
-    from pandas_rust_algos_spark.operators.frequency import cms_cells
+    from pandas_rust_algos_spark.operators.frequency import _cms_sketch
 
-    return (
-        stream.where(F.col(key).isNotNull())
-        .withWatermark("ts", watermark)
-        .select("ts", F.explode(
-            cms_cells(key, width, depth, hash_mode)).alias("c"))
-        .groupBy(
-            F.window("ts", window).alias("w"),
-            F.col("c.d").alias("d"),
-            F.col("c.slot").alias("slot"),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-            .alias("window_start"),
-            "d", "slot", "cnt",
-        )
-    )
+    return cells.windowed(
+        stream, _cms_sketch(key, width, depth, hash_mode),
+        window=window, watermark=watermark)
 
 
 def hll_windowed(
@@ -130,21 +104,10 @@ def hll_windowed(
     the drained result must EQUAL the batch register build over the
     same rows — the gate feeds them through ``hll_estimate`` and
     checks the per-window estimates against a full DuckDB replay."""
-    from pandas_rust_algos_spark.operators.frequency import hll_bucket_rho
+    from pandas_rust_algos_spark.operators.frequency import _hll_sketch
 
-    bucket, rho = hll_bucket_rho(F.col(key), m, hash_mode)
-    return (
-        stream.where(F.col(key).isNotNull())
-        .withWatermark("ts", watermark)
-        .select("ts", bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy(F.window("ts", window).alias("w"), "bucket")
-        .agg(F.max("rho").alias("mj"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-            .alias("window_start"),
-            "bucket", "mj",
-        )
-    )
+    return cells.windowed(stream, _hll_sketch(key, m, hash_mode),
+                          window=window, watermark=watermark)
 
 
 def hist_windowed(
@@ -171,25 +134,11 @@ def hist_windowed(
     quantile walk and checks per-window estimates against a full
     DuckDB replay. Same NULL/NaN drop as the batch sketch (the
     engines disagree on floor(NaN))."""
-    from pandas_rust_algos_spark.operators.histsketch import (
-        _bin_expr,
-        _check,
-    )
+    from pandas_rust_algos_spark.operators.histsketch import _hist_sketch
 
-    _check(lo, hi, bins)
-    v = F.col(col).cast("double")
-    return (
-        stream.where(v.isNotNull() & ~F.isnan(v))
-        .withWatermark("ts", watermark)
-        .select("ts", _bin_expr(F.col(col), lo, hi, bins).alias("bin"))
-        .groupBy(F.window("ts", window).alias("w"), "bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-            .alias("window_start"),
-            "bin", "cnt",
-        )
-    )
+    return cells.windowed(
+        stream, _hist_sketch([("bin", col, lo, hi, bins)]),
+        window=window, watermark=watermark)
 
 
 def session_counts(
@@ -289,13 +238,12 @@ def run_available_now(
 
 def read_table_stream(spark: SparkSession, sf_dir: str,
                       table: str) -> DataFrame:
-    """Any fixture table as an unbounded file stream — the
-    ``read_events_stream`` recipe generalized (schema from the batch
-    file, symlink-dir source so the read-only single-file fixture can
-    back a FileStreamSource; production reads a landing directory or
-    a Kafka topic). No timestamp rebuild: used for tables without the
-    events NANOS column (e.g. ``documents`` for the screen-at-ingest
-    gate)."""
+    """Any fixture table as an unbounded file stream: schema from the
+    batch file, ``maxFilesPerTrigger`` keeps micro-batches bounded.
+    FileStreamSource requires a *directory* to monitor and the fixture
+    is a single read-only file, so it is exposed through a symlink dir
+    (production reads a landing directory or a Kafka topic). No
+    timestamp rebuild; ``read_events_stream`` adds the events one."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     schema = spark.read.parquet(path).schema
     stream_dir = tempfile.mkdtemp(prefix=f"{table}_stream_")
@@ -411,29 +359,9 @@ def hist2d_windowed(
     ``weight=None`` sketches unweighted (w = 1.0 — plain corr as the
     constant-weight special case). NULL/NaN on x, y, or the weight
     drops the row (the batch op's rule)."""
-    from pandas_rust_algos_spark.operators.histsketch import (
-        _bin_expr,
-        _check2d,
-    )
+    from pandas_rust_algos_spark.operators.histsketch import _hist_sketch
 
-    _check2d(lox, hix, loy, hiy, binsx, binsy)
-    vx = F.col(x).cast("double")
-    vy = F.col(y).cast("double")
-    w = F.lit(1.0) if weight is None else F.col(weight).cast("double")
-    return (
-        stream.where(vx.isNotNull() & ~F.isnan(vx)
-                     & vy.isNotNull() & ~F.isnan(vy)
-                     & w.isNotNull() & ~F.isnan(w))
-        .withWatermark("ts", watermark)
-        .select("ts",
-                _bin_expr(F.col(x), lox, hix, binsx).alias("binx"),
-                _bin_expr(F.col(y), loy, hiy, binsy).alias("biny"),
-                F.floor(w * F.lit(1e6)).cast("long").alias("__wq"))
-        .groupBy(F.window("ts", window).alias("w"), "binx", "biny")
-        .agg(F.sum("__wq").alias("wcnt"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-            .alias("window_start"),
-            "binx", "biny", "wcnt",
-        )
-    )
+    return cells.windowed(stream, _hist_sketch(
+        [("binx", x, lox, hix, binsx), ("biny", y, loy, hiy, binsy)],
+        F.lit(1.0) if weight is None else F.col(weight)),
+        window=window, watermark=watermark)

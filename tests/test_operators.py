@@ -1236,6 +1236,7 @@ def test_cms_sketch_estimates(spark):
         cms_estimate,
         cms_sketch,
     )
+    from pandas_rust_algos_spark.streaming.events import cms_windowed
 
     rows = [("a",)] * 50 + [("b",)] * 30 + [("c",)] * 7 + [("d",)] * 1
     df = spark.createDataFrame(rows, "k string")
@@ -1277,6 +1278,15 @@ def test_cms_sketch_estimates(spark):
         cms_sketch(df, "k", width=0)
     with pytest.raises(ValueError):
         cms_sketch(df, "k", hash_mode="nope")
+    # every CMS entry point validates its geometry up front, before a
+    # bad width can reach an executor as a modulo by zero
+    timed = df.select("k", F.current_timestamp().alias("ts"))
+    with pytest.raises(ValueError):
+        cms_windowed(timed, "k", width=0)
+    with pytest.raises(ValueError):
+        cms_estimate(sk1, keys, "k", width=0)
+    with pytest.raises(ValueError):
+        cms_estimate(sk1, keys, "k", depth=0)
 
 
 def test_hll_nunique_replay_and_accuracy(spark):

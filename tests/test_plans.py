@@ -16,7 +16,10 @@ from pandas_rust_algos_spark.plans import registry
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
-    df = registry.get(name).fn(spark, sf_dir)
+    return explain(spark, registry.get(name).fn(spark, sf_dir))
+
+
+def explain(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -166,3 +169,37 @@ def test_winsorize_single_shuffle_narrow_bounds(spark, sf_dir):
     assert len(shuffles) <= 1, \
         f"expected <=1 shuffle exchange, saw {len(shuffles)}"
     assert "BroadcastHashJoin" in final, "bounds must broadcast back"
+
+
+# Spark jobs per gate's collect at sf0.001 on local[4], as measured
+# before the sketch families shared one cell skeleton; a merge that
+# loses its map-side combine or gains a pass shows up here first.
+_SKETCH_MERGE_JOBS = {
+    "cms_incremental_merge": 6,
+    "hll_incremental_merge": 7,
+    "hist_incremental_merge": 3,
+    "hist_weighted_incremental_merge": 3,
+    "corr_weighted_incremental_merge": 3,
+    "kmv_incremental_merge": 5,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SKETCH_MERGE_JOBS))
+def test_sketch_merges_two_phase_jvm_side_job_count(spark, sf_dir, name):
+    """Every incremental-merge gate of the sketch family stays a
+    two-phase (partial + final) aggregate, runs no Python, and spends
+    no more Spark jobs than its pinned count."""
+    sc = spark.sparkContext
+    df = registry.get(name).fn(spark, sf_dir)
+    group = f"sketch-merge-jobs-{name}"
+    sc.setJobGroup(group, "sketch merge job-count pin")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    plan = explain(spark, df)
+    assert "partial_" in plan, f"{name}: lost the map-side partial agg"
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "InPandas"):
+        assert marker not in plan, f"{name}: Python in the plan ({marker})"
+    assert len(jobs) <= _SKETCH_MERGE_JOBS[name], (name, jobs)

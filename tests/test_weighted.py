@@ -313,7 +313,7 @@ def test_weighted_hist_sketch_merge_equals_rescan(spark):
         df.where(F.col("x") < 25), "k", "x", "w", **args)
     h2 = hs.hist_sketch_weighted(
         df.where(F.col("x") >= 25), "k", "x", "w", **args)
-    merged = hs.hist_merge(h1, h2, cnt_col="wcnt")
+    merged = hs.hist_merge(h1, h2)
     assert (sorted(map(tuple, whole.collect()))
             == sorted(map(tuple, merged.collect())))
     qw = sorted(map(tuple, hs.hist_weighted_quantiles(
@@ -455,7 +455,7 @@ def test_weighted_corr_approx_merge_equals_rescan(spark):
     df = _df2(spark, rows)
     args = dict(lox=-0.5, hix=8.5, binsx=9, loy=-0.5, hiy=8.5, binsy=9)
     whole = hs.hist2d_sketch_weighted(df, "k", "x", "y", "w", **args)
-    m = hs.hist2d_merge(
+    m = hs.hist_merge(
         hs.hist2d_sketch_weighted(
             df.where(F.col("x") < 4), "k", "x", "y", "w", **args),
         hs.hist2d_sketch_weighted(
