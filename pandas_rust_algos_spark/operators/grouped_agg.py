@@ -472,7 +472,7 @@ def group_quantile(
 
     for q in qs:
         if not (0.0 <= q <= 1.0):
-            raise ValueError(f"each q must be within [0, 1), got {q}")
+            raise ValueError(f"each q must be within [0, 1], got {q}")
     modes = ("linear", "lower", "higher", "nearest", "midpoint")
     if interpolation not in modes:
         raise ValueError(f"interpolation must be one of {modes}")

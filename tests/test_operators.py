@@ -180,8 +180,9 @@ def test_group_quantile_q0_q1(spark):
 
 
 def test_group_quantile_rejects_bad_q(spark, nullable_df):
-    with pytest.raises(ValueError):
-        ga.group_quantile(nullable_df, "k", "v", [1.5])
+    for q in (1.5, -0.1, float("nan")):
+        with pytest.raises(ValueError, match=r"\[0, 1\]"):
+            ga.group_quantile(nullable_df, "k", "v", [q])
 
 
 # ----------------------------------------------------------- cumulatives

@@ -5,10 +5,15 @@ designed around, pinned so a refactor can't silently regress them:
 - dimension joins broadcast (no fact-table shuffle);
 - aggregations are two-phase (map-side partial before the exchange);
 - JVM-only queries contain no Python evaluation nodes;
-- window transforms share one Sort+Exchange across expressions.
+- window transforms share one Sort+Exchange across expressions;
+- a session compiles each plan shape once (generated-code cache).
 """
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -203,3 +208,53 @@ def test_sketch_merges_two_phase_jvm_side_job_count(spark, sf_dir, name):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "InPandas"):
         assert marker not in plan, f"{name}: Python in the plan ({marker})"
     assert len(jobs) <= _SKETCH_MERGE_JOBS[name], (name, jobs)
+
+
+# Registry queries whose generated classes together overflow Spark's
+# default codegen cache (100 entries): the six benchmark calls plus the
+# other four group_quantile modes.
+_CODEGEN_CYCLE = (
+    "q1_pricing_summary", "group_sum", "group_quantile_linear",
+    "group_quantile_lower", "group_quantile_higher", "group_quantile_nearest",
+    "group_quantile_midpoint", "group_rank", "asof_join", "events_stream_cms",
+)
+
+_CODEGEN_PROBE = """
+import sys
+from pandas_rust_algos_spark import cachelife
+from pandas_rust_algos_spark.plans import registry
+from pandas_rust_algos_spark.session import get_spark
+
+sf_dir, names = sys.argv[1], sys.argv[2].split(",")
+spark = get_spark("codegen-cache-pin")
+spark.sparkContext.setLogLevel("ERROR")
+metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+counts = []
+for _ in range(2):
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    for name in names:
+        registry.get(name).fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        cachelife.release()
+    counts.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+spark.stop()
+print(*counts)
+"""
+
+
+def test_codegen_cache_holds_a_registry_cycle(sf_dir):
+    """A second cycle over the same queries compiles no class: the
+    session's generated-code cache holds every class of the first cycle,
+    though the cycle needs more than Spark's default 100 entries.
+
+    Runs in a fresh process, so classes cached by earlier tests can
+    neither evict these entries nor hide misses."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="2g", PYTHONPATH=os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p))
+    out = subprocess.run(
+        [sys.executable, "-c", _CODEGEN_PROBE, sf_dir, ",".join(_CODEGEN_CYCLE)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    first, second = map(int, out.stdout.split()[-2:])
+    assert first > 100, f"cycle compiles only {first} classes; it no longer overflows the default"
+    assert second == 0, f"second cycle recompiled {second} of {first} classes"

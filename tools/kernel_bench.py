@@ -40,7 +40,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pandas_rust_algos_spark.operators import grouped_agg as ga  # noqa: E402
 from pandas_rust_algos_spark.operators import grouped_transform as gt  # noqa: E402
 from pandas_rust_algos_spark.operators import take as tk  # noqa: E402
-from pandas_rust_algos_spark.session import get_spark  # noqa: E402
+from pandas_rust_algos_spark.session import _cpus, get_spark  # noqa: E402
 
 N_REF = 10_000_000      # benches/groupby.rs:10-13, README.md:118
 N_BIG = 100_000_000     # where fixed overhead amortizes
@@ -138,7 +138,7 @@ def main() -> None:
     }
     print(json.dumps(results))
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
 
     def block(n: int) -> str:
         out = []
