@@ -287,15 +287,13 @@ class GroupBy:
                                     list(cols), duration=duration, aggs=aggs)
 
     def ewm_mean(self, *cols: str, alpha: float, adjust: bool = True,
-                 ignore_na: bool = True, na_output: str = "null",
-                 method: str = "window") -> DataFrame:
+                 ignore_na: bool = True, na_output: str = "null") -> DataFrame:
         """pandas ``.ewm(alpha).mean()`` — all four (adjust, ignore_na)
         modes; ``na_output='carry'`` reproduces pandas' carry-forward
         output on NA input rows."""
         return _gt.group_ewm_mean(self._df, self._keys, self._ordered(),
                                   list(cols), alpha=alpha, adjust=adjust,
-                                  ignore_na=ignore_na, na_output=na_output,
-                                  method=method)
+                                  ignore_na=ignore_na, na_output=na_output)
 
     def ewm_var(self, *cols: str, alpha: float) -> DataFrame:
         return _gt.group_ewm_var(self._df, self._keys, self._ordered(),

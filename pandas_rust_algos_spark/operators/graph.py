@@ -129,7 +129,6 @@ def pagerank_fixed(
     n_iter: int = 5,
     scale: int = 1_000_000,
     checkpoint_every: int = 0,
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """PageRank over directed ``edges``; returns ``(node, rank)`` with
     ``rank`` in integer ``scale``-units (1.0 ≡ ``scale``).
@@ -137,13 +136,10 @@ def pagerank_fixed(
     ``damping_pct`` is the damping factor in percent (85 ⇒ 0.85) so the
     update stays in integer arithmetic end-to-end.
 
-    ``broadcast_ranks=True`` adds an explicit broadcast hint on the
-    per-iteration rank⋈edges join for clusters where the edge-side
-    exchange demonstrably dominates. Default off: the rank table's
-    size statistics already let Catalyst/AQE pick a broadcast join on
-    their own, and measured locally the forced hint is *slower* (a
-    driver collect+rebroadcast round-trip per iteration). Results are
-    bit-identical either way.
+    The per-iteration rank⋈edges join carries no broadcast hint: the
+    rank table's size statistics already let Catalyst/AQE pick a
+    broadcast join on their own, and a forced hint measured *slower*
+    locally (a driver collect+rebroadcast round-trip per iteration).
     """
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be in [0,100], got {damping_pct}")
@@ -198,9 +194,8 @@ def pagerank_fixed(
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
     for i in range(n_iter):
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
         contribs = (
-            ed.join(r, ed.src == r.node)
+            ed.join(ranks, ed.src == ranks.node)
             .select("dst", F.expr("rank div deg").alias("c"))
         )
         sums = contribs.groupBy("dst").agg(F.sum("c").alias("s"))

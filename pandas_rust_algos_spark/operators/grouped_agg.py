@@ -29,6 +29,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from pandas_rust_algos_spark.functions.na import (
     exact_sum,
@@ -330,27 +331,23 @@ def group_nth(
 ) -> DataFrame:
     """n-th non-null value per group, 1-based ``rank`` like the
     reference (``groupby.rs:1876-1878``). Groups with < rank non-null
-    observations yield NULL.
+    observations yield NULL; ``rank < 1`` raises.
 
-    Window ``row_number`` over the non-null subset then a thin agg —
-    one shuffle+sort on (keys, order).
+    One ``row_number`` window ordered NULLs-last then by ``order`` —
+    non-null values take ranks 1..n — and one aggregate that keeps the
+    value at ``rank``. Every group, the NULL-key group included,
+    reaches the aggregate, so no key join-back is needed.
     """
-    from pyspark.sql.window import Window
-
+    if rank < 1:
+        raise ValueError(f"rank is 1-based, got {rank}")
     keys = _cols(keys)
     df = _prep(df, keys, dropna_keys)
-    c = _nn(df, values)
-    w = Window.partitionBy(*keys).orderBy(F.col(order))
-    nn = df.withColumn("__v", c).where(F.col("__v").isNotNull())
-    nn = nn.withColumn("__rn", F.row_number().over(w))
-    picked = (
-        nn.where(F.col("__rn") == rank)
-        .groupBy(*keys)
-        .agg(F.first("__v").alias(values))
-    )
-    # preserve groups whose non-null count < rank (pandas returns NA)
-    all_keys = df.select(*keys).distinct()
-    return all_keys.join(picked, on=keys, how="left")
+    v = F.col("__v")
+    w = Window.partitionBy(*keys).orderBy(v.isNull(), F.col(order))
+    ranked = (df.withColumn("__v", _nn(df, values))
+              .withColumn("__rn", F.row_number().over(w)))
+    return ranked.groupBy(*keys).agg(
+        F.max(F.when(F.col("__rn") == rank, v)).alias(values))
 
 
 def group_ohlc(
@@ -444,6 +441,56 @@ def group_median(
                           min_count=min_count, dropna_keys=dropna_keys)
 
 
+_INTERPOLATIONS = ("linear", "lower", "higher", "nearest", "midpoint")
+
+
+def _ranked(df: DataFrame, keys: list[str], value: str) -> DataFrame:
+    """(keys, ``__v``) with each row's 0-based within-group rank
+    ``__rn`` and the group's non-null count ``__n`` — one shuffle+sort
+    on (keys, value). NULL values sort LAST instead of being filtered
+    out: non-null rows keep exactly the ranks the reference's
+    sort_indexer gives them, while all-NA groups still reach the
+    aggregation (emitting NULL order statistics, pandas/SQL semantics)
+    — no second scan or key re-join needed to reinstate them."""
+    w = Window.partitionBy(*keys)
+    return (
+        df.select(*keys, _nn(df, value).alias("__v"))
+        .withColumn("__rn", F.row_number().over(
+            w.orderBy(F.col("__v").asc_nulls_last())) - 1)
+        .withColumn("__n", F.count("__v").over(w))
+    )
+
+
+def _order_stat(q: float, interpolation: str = "linear") -> Column:
+    """Aggregate picking the q-quantile of ``__v`` in a group ranked by
+    ``__rn`` (0-based, non-null values first) with ``__n`` non-null
+    values — the straddling order statistics at ``floor``/``ceil`` of
+    ``q·(n-1)`` combined per pandas' ``interpolation`` mode
+    (``groupby.rs:1556-1562``)."""
+    rn, v = F.col("__rn"), F.col("__v")
+    target = F.lit(q) * (F.col("__n") - 1)
+    lo, hi = F.floor(target), F.ceil(target)
+    frac = target - lo
+    vlo = F.max(F.when(rn == lo, v))
+    vhi = F.max(F.when(rn == hi, v))
+    if interpolation == "lower":
+        return vlo
+    if interpolation == "higher":
+        return vhi
+    if interpolation == "midpoint":
+        return (vlo + vhi) / 2
+    if interpolation == "linear":
+        # same interpolation expression PERCENTILE_CONT uses:
+        # vlo + frac * (vhi - vlo); frac is constant per group
+        return vlo + F.max(F.when(rn == lo, frac)) * (vhi - vlo)
+    # nearest: pandas rule (frac, q) tie-break — > .5 → hi, == .5 → hi
+    # iff q > .5
+    use_hi = F.max(
+        ((frac > 0.5) | ((frac == 0.5) & F.lit(q > 0.5))).cast("int")
+    ) == 1
+    return F.when(use_hi, vhi).otherwise(vlo)
+
+
 def group_quantile(
     df: DataFrame,
     keys: Sequence[str] | str,
@@ -468,63 +515,18 @@ def group_quantile(
     aggregate O(1) per row. q outside [0,1] raises, like
     ``groupby.rs:1549-1554``.
     """
-    from pyspark.sql.window import Window
-
     for q in qs:
         if not (0.0 <= q <= 1.0):
             raise ValueError(f"each q must be within [0, 1], got {q}")
-    modes = ("linear", "lower", "higher", "nearest", "midpoint")
-    if interpolation not in modes:
-        raise ValueError(f"interpolation must be one of {modes}")
+    if interpolation not in _INTERPOLATIONS:
+        raise ValueError(f"interpolation must be one of {_INTERPOLATIONS}")
 
     keys = _cols(keys)
-    df = _prep(df, keys, dropna_keys)
-    c = _nn(df, value)
-
-    # NULL values sort LAST instead of being filtered out: non-null
-    # rows keep exactly the ranks the reference's sort_indexer gives
-    # them, while all-NA groups still reach the aggregation (emitting
-    # NULL quantiles, pandas/SQL semantics) — no second scan or key
-    # re-join needed to reinstate them
-    nn = df.select(*keys, c.alias("__v"))
-    w = Window.partitionBy(*keys)
-    nn = nn.withColumn(
-        "__rn", F.row_number().over(w.orderBy(F.col("__v").asc_nulls_last())) - 1
-    )
-    nn = nn.withColumn("__n", F.count("__v").over(w))  # non-null count
-    picks = []
-    for i, q in enumerate(qs):
-        target = F.lit(q) * (F.col("__n") - 1)
-        lo = F.floor(target)
-        hi = F.ceil(target)
-        frac = target - lo
-        if interpolation == "lower":
-            picks.append(
-                F.max(F.when(F.col("__rn") == lo, F.col("__v"))).alias(f"__q{i}")
-            )
-        elif interpolation == "higher":
-            picks.append(
-                F.max(F.when(F.col("__rn") == hi, F.col("__v"))).alias(f"__q{i}")
-            )
-        else:  # linear / nearest / midpoint need both straddling elements
-            vlo = F.max(F.when(F.col("__rn") == lo, F.col("__v")))
-            vhi = F.max(F.when(F.col("__rn") == hi, F.col("__v")))
-            if interpolation == "linear":
-                # same interpolation expression PERCENTILE_CONT uses:
-                # vlo + frac * (vhi - vlo); frac is constant per group
-                gfrac = F.max(F.when(F.col("__rn") == lo, frac))
-                picks.append((vlo + gfrac * (vhi - vlo)).alias(f"__q{i}"))
-            elif interpolation == "midpoint":
-                picks.append(((vlo + vhi) / 2).alias(f"__q{i}"))
-            else:  # nearest: pandas rule (frac, q) tie-break
-                # frac is constant per group; > .5 → hi, == .5 → hi iff q > .5
-                use_hi = F.max(
-                    (
-                        (frac > 0.5) | ((frac == 0.5) & F.lit(q > 0.5))
-                    ).cast("int")
-                ) == 1
-                picks.append(F.when(use_hi, vhi).otherwise(vlo).alias(f"__q{i}"))
-    agged = nn.groupBy(*keys).agg(*picks)
+    nn = _ranked(_prep(df, keys, dropna_keys), keys, value)
+    agged = nn.groupBy(*keys).agg(*[
+        _order_stat(q, interpolation).alias(f"__q{i}")
+        for i, q in enumerate(qs)
+    ])
 
     # long form: one row per (group, q)
     pairs = F.array(*[
@@ -557,28 +559,12 @@ def group_describe(
     fixed-point decimal power sums (exact + associative ⇒ partition-
     independent, same construction as :func:`group_corr_cov`).
     """
-    from pyspark.sql.window import Window
-
     keys = _cols(keys)
-    df = _prep(df, keys, dropna_keys)
-    c = _nn(df, value)
-    nn = df.select(*keys, c.alias("__v"))
-    w = Window.partitionBy(*keys)
-    nn = nn.withColumn(
-        "__rn", F.row_number().over(w.orderBy(F.col("__v").asc_nulls_last())) - 1
-    ).withColumn("__n", F.count("__v").over(w))
-
+    nn = _ranked(_prep(df, keys, dropna_keys), keys, value)
     k = 10 ** scale
     fx = F.floor(F.col("__v") * F.lit(k)).cast("decimal(38,0)")
-    picks = []
-    for name, q in (("q25", 0.25), ("q50", 0.5), ("q75", 0.75)):
-        target = F.lit(q) * (F.col("__n") - 1)
-        lo, hi = F.floor(target), F.ceil(target)
-        vlo = F.max(F.when(F.col("__rn") == lo, F.col("__v")))
-        vhi = F.max(F.when(F.col("__rn") == hi, F.col("__v")))
-        gfrac = F.max(F.when(F.col("__rn") == lo, target - lo))
-        picks.append((vlo + gfrac * (vhi - vlo)).alias(name))
-
+    picks = [_order_stat(q).alias(name)
+             for name, q in (("q25", 0.25), ("q50", 0.5), ("q75", 0.75))]
     agged = nn.groupBy(*keys).agg(
         F.count("__v").cast("decimal(38,0)").alias("__cnt"),
         F.sum(fx).alias("__sx"),

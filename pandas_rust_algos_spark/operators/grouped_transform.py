@@ -16,9 +16,9 @@ running state becomes a window frame:
 
 One shuffle+sort on (keys, order) serves *all* window expressions built
 on the same spec — callers composing several transforms should pass the
-same keys/order so Catalyst reuses a single Sort+Exchange. All
-expressions stay JVM-side (no Python in the hot path); ``group_cumprod``
-has an optional exact ``applyInPandas`` escape hatch.
+same keys/order so Catalyst reuses a single Sort+Exchange. Every
+transform has exactly one code path, and all expressions stay JVM-side
+(no Python in the hot path).
 
 NA semantics (pandas): an NA input row yields NA output at that row;
 with ``skipna=False`` the first NA *poisons* the rest of the group
@@ -35,7 +35,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
-from pandas_rust_algos_spark.functions.na import na_normalize
+from pandas_rust_algos_spark.operators.grouped_agg import (
+    _cols,
+    _nn,
+    _order_stat,
+)
 
 __all__ = [
     "running_window",
@@ -63,10 +67,6 @@ __all__ = [
 ]
 
 
-def _cols(names: Sequence[str] | str) -> list[str]:
-    return [names] if isinstance(names, str) else list(names)
-
-
 def running_window(keys: Sequence[str] | str, order: Sequence[str] | str) -> WindowSpec:
     """The shared running-frame window spec (start-of-group → current row)."""
     return (
@@ -76,8 +76,21 @@ def running_window(keys: Sequence[str] | str, order: Sequence[str] | str) -> Win
     )
 
 
-def _is_floating(df: DataFrame, col: str) -> bool:
-    return dict(df.dtypes).get(col) in ("float", "double")
+def _trailing_window(
+    keys: Sequence[str] | str, order: Sequence[str] | str, window: int
+) -> WindowSpec:
+    """The rolling row-count frame: ``window-1`` preceding rows .. current."""
+    return (
+        Window.partitionBy(*_cols(keys))
+        .orderBy(*_cols(order))
+        .rowsBetween(-(window - 1), Window.currentRow)
+    )
+
+
+def _shifted(c: Column | str, periods: int, w: WindowSpec) -> Column:
+    """``c`` from ``periods`` rows earlier in the window's order (later
+    for negative ``periods``); NULL past the group's edge."""
+    return F.lag(c, periods).over(w) if periods >= 0 else F.lead(c, -periods).over(w)
 
 
 def _cumulative(
@@ -94,7 +107,7 @@ def _cumulative(
     w = running_window(keys, order)
     out = df
     for v in _cols(values):
-        c = na_normalize(v, floating=_is_floating(df, v))
+        c = _nn(df, v)
         run = make_running(c, w)
         if skipna:
             # NA row → NA output; later rows continue (sum/min/max skip nulls)
@@ -166,6 +179,16 @@ def group_cumcount(
     return df.withColumn(out_col, F.count(F.lit(1)).over(w) - 1)
 
 
+def _running_prod(c: Column, w: WindowSpec) -> Column:
+    """Running product as sign/zero-aware ``exp(Σ log|x|)``: any zero so
+    far → 0, the parity of the negatives → the sign."""
+    zeros = F.sum(F.when(c == 0, 1).otherwise(0)).over(w)
+    negs = F.sum(F.when(c < 0, 1).otherwise(0)).over(w)
+    logsum = F.sum(F.when(c != 0, F.log(F.abs(c)))).over(w)
+    sign = F.when(negs % 2 == 1, F.lit(-1.0)).otherwise(F.lit(1.0))
+    return F.when(zeros > 0, F.lit(0.0)).otherwise(sign * F.exp(logsum))
+
+
 def group_cumprod(
     df: DataFrame,
     keys: Sequence[str] | str,
@@ -173,68 +196,22 @@ def group_cumprod(
     values: Sequence[str] | str,
     *,
     skipna: bool = True,
-    method: str = "expr",
     out_suffix: str = "_cumprod",
 ) -> DataFrame:
     """Per-group running product (``group_cumprod``,
     ``groupby.rs:211-300``).
 
-    Spark has no windowed product builtin. ``method='expr'`` composes it
-    JVM-side as sign/zero-aware ``exp(Σ log|x|)``:
+    Spark has no windowed product builtin, so it is composed JVM-side
+    as sign/zero-aware ``exp(Σ log|x|)``:
 
         zeros>0 → 0;  parity(negatives) → sign;  exp(sum(log(abs)))
 
-    which is scale-friendly (pure window aggregates, ~1e-14 relative
-    error from the log/exp round-trip). ``method='pandas'`` is the exact
-    escape hatch via ``applyInPandas`` (Arrow-batched, one pass per
-    group; use when bit-exactness matters more than throughput).
+    which is scale-friendly (pure window aggregates) at ~1e-14 relative
+    error from the log/exp round-trip; a zero sticks exactly. Same
+    NA/poisoning rules as :func:`group_cumsum`.
     """
-    if method == "pandas":
-        return _cumprod_pandas(df, keys, order, values, skipna=skipna,
-                               out_suffix=out_suffix)
-    if method != "expr":
-        raise ValueError("method must be 'expr' or 'pandas'")
-    w = running_window(keys, order)
-    out = df
-    for v in _cols(values):
-        c = na_normalize(v, floating=_is_floating(df, v))
-        zeros = F.sum(F.when(c == 0, 1).otherwise(0)).over(w)
-        negs = F.sum(F.when(c < 0, 1).otherwise(0)).over(w)
-        logsum = F.sum(F.when(c != 0, F.log(F.abs(c)))).over(w)
-        sign = F.when(negs % 2 == 1, F.lit(-1.0)).otherwise(F.lit(1.0))
-        run = F.when(zeros > 0, F.lit(0.0)).otherwise(sign * F.exp(logsum))
-        if skipna:
-            expr = F.when(c.isNull(), F.lit(None)).otherwise(run)
-        else:
-            seen_na = F.max(c.isNull().cast("int")).over(w) == 1
-            expr = F.when(seen_na, F.lit(None)).otherwise(run)
-        out = out.withColumn(f"{v}{out_suffix}", expr.cast("double"))
-    return out
-
-
-def _cumprod_pandas(
-    df: DataFrame,
-    keys: Sequence[str] | str,
-    order: Sequence[str] | str,
-    values: Sequence[str] | str,
-    *,
-    skipna: bool,
-    out_suffix: str,
-) -> DataFrame:
-    """Exact grouped cumprod via applyInPandas (Arrow-batched)."""
-    keys, order, values = _cols(keys), _cols(order), _cols(values)
-    out_fields = ", ".join(
-        f"`{v}{out_suffix}` double" for v in values
-    )
-    schema = f"{df.schema.simpleString()[7:-1]}, {out_fields}"
-
-    def fn(pdf):
-        pdf = pdf.sort_values(order, kind="mergesort")
-        for v in values:
-            pdf[f"{v}{out_suffix}"] = pdf[v].cumprod(skipna=skipna)
-        return pdf
-
-    return df.groupBy(*keys).applyInPandas(fn, schema=schema)
+    return _cumulative(df, keys, order, values, _running_prod,
+                       skipna=skipna, out_suffix=out_suffix)
 
 
 def group_shift(
@@ -254,8 +231,7 @@ def group_shift(
     w = Window.partitionBy(*_cols(keys)).orderBy(*_cols(order))
     out = df
     for v in _cols(values):
-        expr = F.lag(v, periods).over(w) if periods >= 0 else F.lead(v, -periods).over(w)
-        out = out.withColumn(f"{v}{out_suffix}", expr)
+        out = out.withColumn(f"{v}{out_suffix}", _shifted(v, periods, w))
     return out
 
 
@@ -294,7 +270,7 @@ def group_fillna(
     )
     out = df
     for v in _cols(values):
-        c = na_normalize(v, floating=_is_floating(df, v))
+        c = _nn(df, v)
         rn = F.row_number().over(Window.partitionBy(*keys).orderBy(*ordering))
         last_valid_rn = F.max(F.when(c.isNotNull(), rn)).over(w)
         filled = F.last(c, ignorenulls=True).over(w)
@@ -339,7 +315,7 @@ def group_interpolate(
     rn = F.row_number().over(w)
     out = df
     for v in _cols(values):
-        c = na_normalize(v, floating=_is_floating(df, v))
+        c = _nn(df, v)
         marked_rn = F.when(c.isNotNull(), rn)
         prev_v = F.last(c, ignorenulls=True).over(wb)
         next_v = F.first(c, ignorenulls=True).over(wf)
@@ -381,7 +357,7 @@ def group_rank(
         raise ValueError("na_option must be keep|top|bottom")
 
     keys = _cols(keys)
-    c = na_normalize(value, floating=_is_floating(df, value))
+    c = _nn(df, value)
     if na_option == "top":
         vc = c.asc_nulls_first() if ascending else c.desc_nulls_first()
     else:
@@ -433,9 +409,8 @@ def group_diff(
     w = Window.partitionBy(*_cols(keys)).orderBy(*_cols(order))
     out = df
     for v in _cols(values):
-        c = na_normalize(v, floating=_is_floating(df, v))
-        prev = F.lag(c, periods).over(w) if periods >= 0 \
-            else F.lead(c, -periods).over(w)
+        c = _nn(df, v)
+        prev = _shifted(c, periods, w)
         out = out.withColumn(f"{v}{out_suffix}", c - prev)
     return out
 
@@ -456,13 +431,46 @@ def group_pct_change(
     w = Window.partitionBy(*_cols(keys)).orderBy(*_cols(order))
     out = df
     for v in _cols(values):
-        c = na_normalize(v, floating=_is_floating(df, v))
-        prev = F.lag(c, periods).over(w) if periods >= 0 \
-            else F.lead(c, -periods).over(w)
+        c = _nn(df, v)
+        prev = _shifted(c, periods, w)
         out = out.withColumn(
             f"{v}{out_suffix}",
             F.when(prev != 0, c / prev - 1),
         )
+    return out
+
+
+#: window aggregates by pandas name, shared by every rolling/expanding op
+_WINDOW_AGGS = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max,
+                "std": F.stddev_samp, "var": F.var_samp, "count": F.count}
+
+
+def _check_aggs(aggs: Sequence[str], kind: str) -> None:
+    bad = set(aggs) - set(_WINDOW_AGGS)
+    if bad:
+        raise ValueError(f"unsupported {kind} aggs {sorted(bad)}; "
+                         f"choose from {sorted(_WINDOW_AGGS)}")
+
+
+def _frame_aggs(
+    df: DataFrame,
+    values: Sequence[str] | str,
+    w: WindowSpec,
+    aggs: Sequence[str],
+    min_periods: int,
+    out_fmt: str,
+) -> DataFrame:
+    """Each agg of each value over frame ``w``, NULL where the frame
+    holds fewer than ``min_periods`` non-null observations — expressed
+    as a count over the same frame, so every expression shares one
+    Sort+Exchange."""
+    out = df
+    for v in _cols(values):
+        c = _nn(df, v)
+        nobs = F.count(c).over(w)
+        for a in aggs:
+            expr = F.when(nobs >= min_periods, _WINDOW_AGGS[a](c).over(w))
+            out = out.withColumn(out_fmt.format(v=v, a=a), expr)
     return out
 
 
@@ -481,30 +489,13 @@ def rolling_agg(
     trailing row-count frames (window-1 preceding .. current).
 
     min_periods (default = window) NULLs positions whose frame holds
-    fewer non-null observations — expressed as a count over the same
-    frame, so every rolling expression for one (keys, order, window)
-    shares a single Sort+Exchange.
+    fewer non-null observations; every rolling expression for one
+    (keys, order, window) shares a single Sort+Exchange.
     """
-    _AGGS = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max,
-             "std": F.stddev_samp, "count": F.count}
-    bad = set(aggs) - set(_AGGS)
-    if bad:
-        raise ValueError(f"unsupported rolling aggs {sorted(bad)}; "
-                         f"choose from {sorted(_AGGS)}")
+    _check_aggs(aggs, "rolling")
+    w = _trailing_window(keys, order, window)
     mp = window if min_periods is None else min_periods
-    w = (
-        Window.partitionBy(*_cols(keys))
-        .orderBy(*_cols(order))
-        .rowsBetween(-(window - 1), Window.currentRow)
-    )
-    out = df
-    for v in _cols(values):
-        c = na_normalize(v, floating=_is_floating(df, v))
-        nobs = F.count(c).over(w)
-        for a in aggs:
-            expr = F.when(nobs >= mp, _AGGS[a](c).over(w))
-            out = out.withColumn(out_fmt.format(v=v, a=a), expr)
-    return out
+    return _frame_aggs(df, values, w, aggs, mp, out_fmt)
 
 
 def expanding_agg(
@@ -521,25 +512,10 @@ def expanding_agg(
     group → current-row frames (``rolling_agg`` with an unbounded left
     edge). Positions whose frame holds fewer than ``min_periods``
     non-null observations yield NULL.
-
-    Same single Sort+Exchange contract as every transform here: all
-    expanding expressions for one (keys, order) share the shuffle.
     """
-    _AGGS = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max,
-             "std": F.stddev_samp, "var": F.var_samp, "count": F.count}
-    bad = set(aggs) - set(_AGGS)
-    if bad:
-        raise ValueError(f"unsupported expanding aggs {sorted(bad)}; "
-                         f"choose from {sorted(_AGGS)}")
-    w = running_window(keys, order)
-    out = df
-    for v in _cols(values):
-        c = na_normalize(v, floating=_is_floating(df, v))
-        nobs = F.count(c).over(w)
-        for a in aggs:
-            expr = F.when(nobs >= min_periods, _AGGS[a](c).over(w))
-            out = out.withColumn(out_fmt.format(v=v, a=a), expr)
-    return out
+    _check_aggs(aggs, "expanding")
+    return _frame_aggs(df, values, running_window(keys, order), aggs,
+                       min_periods, out_fmt)
 
 
 def rolling_time_agg(
@@ -578,12 +554,7 @@ def rolling_time_agg(
     Scale: one Sort+Exchange on (keys, ts) serves all requested aggs;
     state per frame is O(1) (sliding aggregates), never a buffered list.
     """
-    _AGGS = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max,
-             "count": F.count}
-    bad = set(aggs) - set(_AGGS)
-    if bad:
-        raise ValueError(f"unsupported rolling aggs {sorted(bad)}; "
-                         f"choose from {sorted(_AGGS)}")
+    _check_aggs(aggs, "rolling")
     _CLOSED = {"right": (1, 0), "both": (0, 0),
                "left": (0, -1), "neither": (1, -1)}
     if closed not in _CLOSED:
@@ -599,9 +570,10 @@ def rolling_time_agg(
     )
     out = df
     for v in _cols(values):
-        c = na_normalize(v, floating=_is_floating(df, v))
+        c = _nn(df, v)
         for a in aggs:
-            out = out.withColumn(out_fmt.format(v=v, a=a), _AGGS[a](c).over(w))
+            out = out.withColumn(out_fmt.format(v=v, a=a),
+                                 _WINDOW_AGGS[a](c).over(w))
     return out
 
 
@@ -652,14 +624,10 @@ def rolling_corr_cov(
     NULL corr (pandas NaN). Covariance is the sample (ddof=1) one.
     """
     mp = window if min_periods is None else min_periods
-    w = (
-        Window.partitionBy(*_cols(keys))
-        .orderBy(*_cols(order))
-        .rowsBetween(-(window - 1), Window.currentRow)
-    )
+    w = _trailing_window(keys, order, window)
     k = 10 ** scale
-    cx = na_normalize(x, floating=_is_floating(df, x))
-    cy = na_normalize(y, floating=_is_floating(df, y))
+    cx = _nn(df, x)
+    cy = _nn(df, y)
     both = cx.isNotNull() & cy.isNotNull()
     fx = F.when(both, F.floor(cx * F.lit(k)).cast("decimal(38,0)"))
     fy = F.when(both, F.floor(cy * F.lit(k)).cast("decimal(38,0)"))
@@ -708,12 +676,8 @@ def rolling_quantile(
     if not 0.0 <= q <= 1.0:
         raise ValueError(f"q must be in [0,1], got {q}")
     mp = window if min_periods is None else min_periods
-    w = (
-        Window.partitionBy(*_cols(keys))
-        .orderBy(*_cols(order))
-        .rowsBetween(-(window - 1), Window.currentRow)
-    )
-    c = na_normalize(value, floating=_is_floating(df, value))
+    w = _trailing_window(keys, order, window)
+    c = _nn(df, value)
     arr = F.array_sort(F.collect_list(c).over(w))
     n = F.size(arr)
     pos = (n - 1).cast("double") * F.lit(float(q))
@@ -726,6 +690,42 @@ def rolling_quantile(
                                          val))
 
 
+#: longest EWM lookback frame, in rows (see :func:`_ewm_frame`)
+_EWM_MAX_LOOKBACK = 10_000
+#: relative weight of the terms an EWM lookback frame leaves out
+_EWM_TRUNCATION = 1e-15
+
+
+def _ewm_frame(
+    keys: list[str], order: list[str], alpha: float
+) -> tuple[float, WindowSpec]:
+    """The decay ``1-α`` and the bounded trailing frame every EWM fold
+    runs over: lookback K rows with ``(1-α)^K < 1e-15``, so the terms
+    left out are below double precision (α=0.5 → K=50; smaller α →
+    longer K). K is capped at :data:`_EWM_MAX_LOOKBACK` rows to keep
+    per-row state bounded; an ``alpha`` that would need more raises
+    rather than silently breaking the bound."""
+    import math
+
+    if not (0.0 < alpha <= 1.0):
+        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
+    w1 = 1.0 - alpha
+    K = 0 if w1 == 0.0 else math.ceil(math.log(_EWM_TRUNCATION) / math.log(w1))
+    if K > _EWM_MAX_LOOKBACK:
+        min_alpha = 1.0 - _EWM_TRUNCATION ** (1.0 / _EWM_MAX_LOOKBACK)
+        raise ValueError(
+            f"alpha={alpha} needs a {K}-row lookback to keep the EWM "
+            f"truncation below {_EWM_TRUNCATION:g}; the smallest supported "
+            f"alpha is {math.ceil(min_alpha * 1e6) / 1e6} "
+            f"({_EWM_MAX_LOOKBACK}-row cap)")
+    frame = (
+        Window.partitionBy(*keys)
+        .orderBy(*order)
+        .rowsBetween(-K, Window.currentRow)
+    )
+    return w1, frame
+
+
 def group_ewm_mean(
     df: DataFrame,
     keys: Sequence[str] | str,
@@ -733,7 +733,6 @@ def group_ewm_mean(
     values: Sequence[str] | str,
     *,
     alpha: float,
-    method: str = "window",
     ignore_na: bool = True,
     adjust: bool = True,
     na_output: str = "null",
@@ -755,13 +754,14 @@ def group_ewm_mean(
     ``((1-α)·old_wt·y + α·x) / ((1-α)·old_wt + α)`` then resets
     ``old_wt`` to 1 — pandas' own recurrence for this mode.
 
-    ``method='window'`` stays JVM-side: the recurrence is re-expressed
-    as a fold over a *bounded* trailing frame — lookback K chosen so
-    (1-α)^K < 1e-15, i.e. truncated terms are below double precision
-    (for α=0.5 that's K=50; smaller α → longer K). State per row is the
-    collected frame (K values), so memory is bounded and independent of
-    group size — this is what makes it viable inside a 10^9-row group
-    where the exact recurrence would serialize.
+    The recurrence stays JVM-side, re-expressed as a fold over a
+    *bounded* trailing frame — lookback K chosen so (1-α)^K < 1e-15,
+    i.e. truncated terms are below double precision (for α=0.5 that's
+    K=50; smaller α → longer K). State per row is the collected frame
+    (K values), so memory is bounded and independent of group size —
+    this is what makes it viable inside a 10^9-row group where the
+    exact recurrence would serialize. K is capped at 10,000 rows, so
+    ``alpha`` below about 0.00345 raises ``ValueError``.
 
     NA handling: with ``ignore_na=True``, ``collect_list`` drops NULLs
     so decay steps skip NA rows; ``ignore_na=False`` (pandas' default)
@@ -773,50 +773,13 @@ def group_ewm_mean(
     convention; ``"carry"`` emits the running mean carried past the NA
     row — pandas' convention, differential-tested against
     ``Series.ewm`` with injected NULLs.
-
-    ``method='pandas'`` is the exact escape hatch (applyInPandas,
-    Arrow-batched, one pass per group) for α small enough that K gets
-    silly or when bit-parity with pandas matters.
     """
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    keys, order, values = _cols(keys), _cols(order), _cols(values)
-    if method == "pandas":
-        out_fields = ", ".join(f"`{v}{out_suffix}` double" for v in values)
-        schema = f"{df.schema.simpleString()[7:-1]}, {out_fields}"
-
-        def fn(pdf):
-            pdf = pdf.sort_values(order, kind="mergesort")
-            for v in values:
-                pdf[f"{v}{out_suffix}"] = pdf[v].ewm(
-                    alpha=alpha, ignore_na=ignore_na, adjust=adjust).mean()
-            return pdf
-
-        return df.groupBy(*keys).applyInPandas(fn, schema=schema)
-    if method != "window":
-        raise ValueError("method must be 'window' or 'pandas'")
     if na_output not in ("null", "carry"):
         raise ValueError("na_output must be 'null' or 'carry'")
-
-    import math
-
-    w1 = 1.0 - alpha
-    K = 0 if w1 == 0.0 else min(10_000, int(math.ceil(math.log(1e-15) / math.log(w1))))
-    frame = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(-K, Window.currentRow)
-    )
-    def gate(valid_out: Column, carry_out: Column, cur: Column) -> Column:
-        """Apply the na_output convention: NULL-out NA input rows, or
-        carry the running value past them (pandas)."""
-        if na_output == "carry":
-            return carry_out
-        return F.when(cur.isNotNull(), valid_out)
-
+    w1, frame = _ewm_frame(_cols(keys), _cols(order), alpha)
     out = df
-    for v in values:
-        c = na_normalize(v, floating=_is_floating(df, v))
+    for v in _cols(values):
+        c = _nn(df, v)
         if not adjust and not ignore_na:
             # pandas' exact (weighted_avg, old_wt) recurrence: every row
             # decays old_wt, NULL rows contribute nothing, observations
@@ -853,7 +816,7 @@ def group_ewm_mean(
                     .alias("ow"),
                 ),
             )
-            expr = gate(folded["y"], folded["y"], c)
+            expr = folded["y"]
         elif ignore_na and not adjust:
             vals = F.collect_list(c).over(frame)
             n = F.size(vals)
@@ -868,8 +831,7 @@ def group_ewm_mean(
                     .alias("y")
                 ),
             )
-            expr = gate(F.when(n > 0, folded["y"]),
-                        F.when(n > 0, folded["y"]), c)
+            expr = F.when(n > 0, folded["y"])
         elif ignore_na:
             vals = F.collect_list(c).over(frame)  # non-null values, frame order
             n = F.size(vals)
@@ -883,8 +845,7 @@ def group_ewm_mean(
                     (acc["den"] * F.lit(w1) + F.lit(1.0)).alias("den"),
                 ),
             )
-            expr = gate(F.when(n > 0, folded["num"] / folded["den"]),
-                        F.when(n > 0, folded["num"] / folded["den"]), c)
+            expr = F.when(n > 0, folded["num"] / folded["den"])
         else:
             # keep every row in the frame: a NULL row still ages the
             # accumulators (m=0 contributes nothing but the decay runs)
@@ -901,13 +862,12 @@ def group_ewm_mean(
                     (acc["den"] * F.lit(w1) + p["m"]).alias("den"),
                 ),
             )
-            expr = gate(
-                F.when(folded["den"] > F.lit(0.0),
-                       folded["num"] / folded["den"]),
-                F.when(folded["den"] > F.lit(0.0),
-                       folded["num"] / folded["den"]),
-                c,
-            )
+            expr = F.when(folded["den"] > F.lit(0.0),
+                          folded["num"] / folded["den"])
+        # na_output: NULL-out NA input rows, or carry the running value
+        # past them (pandas)
+        if na_output == "null":
+            expr = F.when(c.isNotNull(), expr)
         out = out.withColumn(f"{v}{out_suffix}", expr)
     return out
 
@@ -934,25 +894,15 @@ def group_ewm_var(
     viable inside arbitrarily large groups.
 
     NA handling matches group_ewm_mean: ``collect_list`` drops NULLs
-    (pandas ``ignore_na=True``).
+    (pandas ``ignore_na=True``). The same lookback cap applies: ``alpha``
+    below about 0.00345 raises ``ValueError``.
     """
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    import math
-
-    keys, order, values = _cols(keys), _cols(order), _cols(values)
+    w1, frame = _ewm_frame(_cols(keys), _cols(order), alpha)
     if out_suffix is None:
         out_suffix = "_ewmstd" if std else "_ewmvar"
-    w1 = 1.0 - alpha
-    K = 0 if w1 == 0.0 else min(10_000, int(math.ceil(math.log(1e-15) / math.log(w1))))
-    frame = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(-K, Window.currentRow)
-    )
     out = df
-    for v in values:
-        c = na_normalize(v, floating=_is_floating(df, v))
+    for v in _cols(values):
+        c = _nn(df, v)
         vals = F.collect_list(c).over(frame)
         folded = F.aggregate(
             vals,
@@ -1002,7 +952,7 @@ def group_zscore(
     w = Window.partitionBy(*keys)
     out = df
     for v in values:
-        c = na_normalize(v, floating=_is_floating(df, v))
+        c = _nn(df, v)
         fx = F.floor(c * F.lit(k)).cast("decimal(38,0)")
         n = F.count(c).over(w).cast("decimal(38,0)")
         sx = F.sum(fx).over(w)
@@ -1016,6 +966,27 @@ def group_zscore(
     return out
 
 
+def _join_back(
+    df: DataFrame, stats: DataFrame, keys: list[str], how: str = "left"
+) -> DataFrame:
+    """Join per-group ``stats`` (the keys plus stat columns) back onto
+    ``df`` by key. NULL-safe, so NULL keys form their own group, and
+    always a broadcast of the group-cardinality stats side, so ``df``
+    is never shuffled: after an aggregation the size ESTIMATE inherits
+    the scan's, the static planner would plan a sort-merge join, and
+    ``df`` would pay a shuffle write that AQE's runtime broadcast
+    conversion cannot un-spend."""
+    aliases = [f"__jk{i}" for i in range(len(keys))]
+    stats = F.broadcast(stats.select(
+        *[F.col(k).alias(a) for k, a in zip(keys, aliases)],
+        *[c for c in stats.columns if c not in keys]))
+    cond = None
+    for k, a in zip(keys, aliases):
+        c = df[k].eqNullSafe(stats[a])
+        cond = c if cond is None else cond & c
+    return df.join(stats, cond, how).drop(*aliases)
+
+
 def group_winsorize(
     df: DataFrame,
     keys: Sequence[str] | str,
@@ -1024,7 +995,6 @@ def group_winsorize(
     lower: float = 0.05,
     upper: float = 0.95,
     out_col: str | None = None,
-    broadcast_stats: bool = True,
 ) -> DataFrame:
     """Per-group winsorization: clip ``value`` to the group's
     [lower, upper] linear-interpolated percentile bounds, keeping every
@@ -1033,28 +1003,20 @@ def group_winsorize(
     Plan (the r8 rewrite — the ``group_describe`` recipe applied to a
     transform): the bounds are computed on a NARROW (keys, value)
     projection — one exchange+sort for the within-group ranks, then
-    the straddling order statistics are picked in a groupBy that
-    reuses the window's partitioning — and joined back to the input by
-    key (group-cardinality rows; AQE broadcasts a small bounds side).
-    The FULL-WIDTH rows never shuffle and never buffer. The previous
-    formulation ran the rank window plus SIX unbounded-frame window
-    aggregates over the full-width rows — at sf1 with a 3-value key
+    the straddling order statistics are picked (the linear pick of
+    ``group_quantile``) in a groupBy that reuses the window's
+    partitioning — and broadcast back to the input by key
+    (group-cardinality rows, see ``_join_back``). The FULL-WIDTH rows
+    never shuffle and never buffer. The previous formulation ran the
+    rank window plus SIX unbounded-frame window aggregates over the
+    full-width rows — at sf1 with a 3-value key
     that re-buffered ~2M-row partitions seven times per task and
     measured 5.6× for 10× data; this shape moves only (keys, value)
     through the exchange. Semantics unchanged: NULLs sort last, rank
     targets use the non-null count, NULL inputs stay NULL, NULL keys
     form their own group (null-safe join back), and all-NULL groups
     pass values through (least/greatest skip NULL bounds on both
-    engines).
-
-    ``broadcast_stats`` (default True) pins the join-back to a
-    broadcast of the group-cardinality bounds side, so the full-width
-    input is NEVER shuffled — without the hint the post-aggregation
-    size ESTIMATE inherits the scan's, the static planner plans
-    sort-merge, and the fact table pays a shuffle write that AQE's
-    runtime broadcast conversion cannot un-spend. Set False only when
-    the group count itself is data-sized (too many groups to hold in
-    executor memory), where a shuffle join is the right plan."""
+    engines)."""
     if not (0.0 <= lower <= upper <= 1.0):
         raise ValueError(
             f"need 0 <= lower <= upper <= 1, got {lower}, {upper}"
@@ -1071,35 +1033,16 @@ def group_winsorize(
             F.row_number().over(wp.orderBy(F.col("__v"))) - 1)
         .withColumn("__n", F.count("__v").over(wp))
     )
-
-    def pick(q: float, name: str) -> Column:
-        target = F.lit(q) * (F.col("__n") - 1)
-        lo, hi = F.floor(target), F.ceil(target)
-        vlo = F.max(F.when(F.col("__rn") == lo, F.col("__v")))
-        vhi = F.max(F.when(F.col("__rn") == hi, F.col("__v")))
-        frac = F.max(F.when(F.col("__rn") == lo, target - lo))
-        return (vlo + frac * (vhi - vlo)).alias(name)
-
     bounds = nn.groupBy(*keys).agg(
-        pick(lower, "__blo"), pick(upper, "__bhi"))
-    bkeys = [f"__bk{i}" for i in range(len(keys))]
-    bounds = bounds.select(
-        *[F.col(k).alias(b) for k, b in zip(keys, bkeys)],
-        "__blo", "__bhi")
-    if broadcast_stats:
-        bounds = F.broadcast(bounds)
-    cond = None
-    for k, b in zip(keys, bkeys):
-        c = df[k].eqNullSafe(bounds[b])
-        cond = c if cond is None else cond & c
+        _order_stat(lower).alias("__blo"), _order_stat(upper).alias("__bhi"))
     clipped = F.when(
         v.isNotNull(),
         F.least(F.greatest(v, F.col("__blo")), F.col("__bhi")),
     )
     return (
-        df.join(bounds, cond, "left")
+        _join_back(df, bounds, keys)
         .withColumn(out_col, clipped)
-        .drop("__blo", "__bhi", *bkeys)
+        .drop("__blo", "__bhi")
     )
 
 
@@ -1110,7 +1053,6 @@ def group_robust_zscore(
     *,
     scale_const: float = 1.4826,
     out_col: str | None = None,
-    broadcast_stats: bool = True,
 ) -> DataFrame:
     """Per-group ROBUST standardization: ``(x − median) /
     (1.4826·MAD)`` where MAD is the median absolute deviation — the
@@ -1127,14 +1069,11 @@ def group_robust_zscore(
     pass carries the group median through (``min`` of a per-group
     constant), so the stats side is built in exactly two narrow scans
     with no med⋈mad re-join and no re-derivation of the median
-    subtree. ``broadcast_stats`` (default True) pins the join-back to
-    a broadcast of the group-cardinality stats side so the full-width
-    input never shuffles (the ``group_winsorize`` rationale — size
-    estimates after aggregation inherit the scan's, so the static
-    planner would otherwise plan a sort-merge exchange on the fact
-    table). NULL values stay NULL, NULL keys form their own group
-    (null-safe joins), and an all-equal group (MAD = 0) yields NULL —
-    a zero spread admits no standard score.
+    subtree. Both joins broadcast the group-cardinality side
+    (``_join_back``), so the full-width input never shuffles. NULL
+    values stay NULL, NULL keys form their own group (null-safe
+    joins), and an all-equal group (MAD = 0) yields NULL — a zero
+    spread admits no standard score.
 
     Determinism: medians round to 6 (the ``group_median`` gate recipe
     — interpolated order statistics are the registry's documented
@@ -1149,33 +1088,14 @@ def group_robust_zscore(
     )
     med = narrow.groupBy(*keys).agg(
         F.round(F.median("__v"), 6).alias("__med"))
-    mkeys = [f"__mk{i}" for i in range(len(keys))]
-    medr = med.select(
-        *[F.col(k).alias(m) for k, m in zip(keys, mkeys)], "__med")
-
-    def _cond(left: DataFrame, right: DataFrame, rkeys):
-        cond = None
-        for k, rk in zip(keys, rkeys):
-            c = left[k].eqNullSafe(right[rk])
-            cond = c if cond is None else cond & c
-        return cond
-
-    if broadcast_stats:
-        medr = F.broadcast(medr)
-    dev = narrow.join(medr, _cond(narrow, medr, mkeys)).select(
+    dev = _join_back(narrow, med, keys, "inner").select(
         *keys, "__med", F.abs(F.col("__v") - F.col("__med")).alias("__d"))
     # one aggregation yields BOTH stats: __med is constant within a
     # group, so min() recovers it exactly — no med⋈mad join, and the
     # median subtree is never re-derived for a second scan
-    mad = dev.groupBy(*keys).agg(
-        F.round(F.median("__d"), 6).alias("__mad"),
-        F.min("__med").alias("__med"))
-    skeys = [f"__sk{i}" for i in range(len(keys))]
-    stats = mad.select(
-        *[F.col(k).alias(s) for k, s in zip(keys, skeys)],
-        "__med", "__mad")
-    if broadcast_stats:
-        stats = F.broadcast(stats)
+    stats = dev.groupBy(*keys).agg(
+        F.min("__med").alias("__med"),
+        F.round(F.median("__d"), 6).alias("__mad"))
     rz = F.when(
         v.isNotNull() & (F.col("__mad") > 0),
         F.round(
@@ -1183,7 +1103,7 @@ def group_robust_zscore(
             / (F.lit(scale_const) * F.col("__mad")), 6),
     )
     return (
-        df.join(stats, _cond(df, stats, skeys), "left")
+        _join_back(df, stats, keys)
         .withColumn(out_col, rz)
-        .drop("__med", "__mad", *skeys)
+        .drop("__med", "__mad")
     )

@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pandas_rust_algos_spark.functions.na import fixed_sum
-from pandas_rust_algos_spark.operators.grouped_agg import _prep
+from pandas_rust_algos_spark.operators.grouped_agg import _cols, _prep
 
 __all__ = [
     "group_weighted_mean",
@@ -73,10 +73,6 @@ __all__ = [
     "sql_group_weighted_quantile",
     "sql_group_weighted_corr_cov",
 ]
-
-
-def _cols(x: Sequence[str] | str) -> list[str]:
-    return [x] if isinstance(x, str) else list(x)
 
 
 def _q_name(q: float) -> str:

@@ -132,6 +132,9 @@ def get_spark(app_name: str = "pandas_rust_algos_spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no stage progress bars on the console: they interleave with
+        # the stdout of bench.py and the tools
+        .config("spark.ui.showConsoleProgress", "false")
         # Single-JVM harness: every task is process-local by
         # construction, so the scheduler's delay-scheduling wait
         # (default 3s/level) is pure stall — measured 6s on EVERY

@@ -102,6 +102,24 @@ def test_cumsum_matches_pandas(frame, skipna):
         assert close(got[(pdf.loc[i, "ord"],)], val), (skipna, i, val)
 
 
+@pytest.mark.parametrize("skipna", [True, False])
+def test_cumprod_matches_pandas(frame, skipna):
+    """The log/exp running product against pandas' exact cumprod, with
+    zeros and negatives injected so the sign parity and the sticky
+    zero are both exercised."""
+    pdf, sdf = frame
+    pdf = pdf.copy()
+    pdf.loc[pdf["ord"] % 37 == 5, "v"] = 0.0
+    pdf.loc[pdf["ord"] % 11 == 3, "v"] *= -1.0
+    sdf = sdf.sparkSession.createDataFrame(pdf)
+    out = gt.group_cumprod(sdf, "k", ["ord"], ["v"], skipna=skipna)
+    got = collect_map(out, ["ord"], "v_cumprod")
+    exp = pdf.sort_values("ord").groupby("k")["v"].cumprod(skipna=skipna)
+    for i, val in exp.items():
+        assert close(got[(pdf.loc[i, "ord"],)], val, tol=1e-9), \
+            (skipna, i, val)
+
+
 def test_ffill_limit_matches_pandas(frame):
     pdf, sdf = frame
     out = gt.group_fillna(sdf, "k", ["ord"], ["v"], direction="ffill", limit=2)

@@ -80,17 +80,6 @@ def test_bad_args(spark):
         pagerank_fixed(df, n_iter=-1)
 
 
-def test_broadcast_hint_bit_identical(spark):
-    edges = [(i, (i * 11) % 17) for i in range(80)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    a = {r["node"]: r["rank"]
-         for r in pagerank_fixed(df, n_iter=4).collect()}
-    b = {r["node"]: r["rank"]
-         for r in pagerank_fixed(df, n_iter=4,
-                                 broadcast_ranks=True).collect()}
-    assert a == b == _ref(edges, n_iter=4)
-
-
 # ------------------------------------------------------- BFS (round 4)
 
 

@@ -74,6 +74,28 @@ def test_group_nth_beyond_nonnull_count(spark, nullable_df):
     assert rows(out, "k", "v") == [("a", 3.0), ("b", None), ("c", None)]
 
 
+def test_group_nth_keeps_null_key_group(spark):
+    # dropna_keys=False: the NULL-key group is a group like any other,
+    # as in group_first and pandas' nth with dropna=False
+    df = spark.createDataFrame(
+        [("a", 1, 1.0), ("a", 2, 2.0), (None, 1, 5.0), (None, 2, 6.0),
+         (None, 3, None)],
+        "k string, ord int, v double")
+    for rank, want in ((1, {"a": 1.0, None: 5.0}),
+                       (2, {"a": 2.0, None: 6.0}),
+                       (3, {"a": None, None: None})):
+        out = ga.group_nth(df, "k", "v", "ord", rank=rank, dropna_keys=False)
+        assert {r["k"]: r["v"] for r in out.collect()} == want, rank
+    first = ga.group_first(df, "k", ["v"], "ord", dropna_keys=False)
+    assert {r["k"]: r["v"] for r in first.collect()} == {"a": 1.0, None: 5.0}
+
+
+def test_group_nth_rank_is_one_based(spark, nullable_df):
+    for rank in (0, -1):
+        with pytest.raises(ValueError, match="1-based"):
+            ga.group_nth(nullable_df, "k", "v", "ord", rank=rank)
+
+
 # ------------------------------------------------------------- NaN == NA
 
 
@@ -206,13 +228,12 @@ def test_cumprod_zeros_negatives(spark):
         [("g", 1, 2.0), ("g", 2, -3.0), ("g", 3, 0.0), ("g", 4, 5.0)],
         "k string, ord int, v double",
     )
-    for method in ("expr", "pandas"):
-        out = gt.group_cumprod(df, "k", ["ord"], ["v"], method=method)
-        got = {r["ord"]: r["v_cumprod"] for r in out.collect()}
-        assert got[1] == pytest.approx(2.0)
-        assert got[2] == pytest.approx(-6.0)
-        assert got[3] == 0.0
-        assert got[4] == 0.0, f"{method}: zero sticks"
+    out = gt.group_cumprod(df, "k", ["ord"], ["v"])
+    got = {r["ord"]: r["v_cumprod"] for r in out.collect()}
+    assert got[1] == pytest.approx(2.0)
+    assert got[2] == pytest.approx(-6.0)
+    assert got[3] == 0.0
+    assert got[4] == 0.0, "zero sticks"
 
 
 def test_cummax_is_not_cummin(spark):
@@ -532,12 +553,10 @@ def test_ewm_matches_pandas(spark):
     data = [("g", i, float(v)) for i, v in enumerate([1, 3, 2, 8, 5])]
     df = spark.createDataFrame(data, "k string, ord int, v double")
     want = pd.Series([1.0, 3.0, 2.0, 8.0, 5.0]).ewm(alpha=0.5).mean().tolist()
-    for method in ("window", "pandas"):
-        out = gt.group_ewm_mean(df, "k", ["ord"], ["v"], alpha=0.5,
-                                method=method)
-        got = [r["v_ewm"] for r in out.orderBy("ord").collect()]
-        for g, w in zip(got, want):
-            assert g == pytest.approx(w, rel=1e-12), method
+    out = gt.group_ewm_mean(df, "k", ["ord"], ["v"], alpha=0.5)
+    got = [r["v_ewm"] for r in out.orderBy("ord").collect()]
+    for g, w in zip(got, want):
+        assert g == pytest.approx(w, rel=1e-12)
 
 
 def test_ewm_na_row_stays_na(spark):
@@ -555,6 +574,18 @@ def test_ewm_na_row_stays_na(spark):
 def test_ewm_rejects_bad_alpha(spark, nullable_df):
     with pytest.raises(ValueError):
         gt.group_ewm_mean(nullable_df, "k", ["ord"], ["v"], alpha=0.0)
+
+
+def test_ewm_rejects_alpha_below_lookback_cap(spark, nullable_df):
+    # alpha=0.001 needs ~34,500 rows of lookback for the 1e-15 bound;
+    # the 10,000-row cap would drop (1-alpha)^10000 ~ 4.5e-5 of the
+    # weight, so both EWM ops refuse instead of truncating silently
+    for op in (gt.group_ewm_mean, gt.group_ewm_var):
+        with pytest.raises(ValueError,
+                           match=r"alpha=0\.001 .* smallest supported "
+                                 r"alpha is 0\.003448"):
+            op(nullable_df, "k", ["ord"], ["v"], alpha=0.001)
+        assert op(nullable_df, "k", ["ord"], ["v"], alpha=0.003448).count() == 6
 
 
 def test_pivot_dynamic_discovers_and_caps(spark, sf_dir):
