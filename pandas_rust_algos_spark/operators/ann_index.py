@@ -29,16 +29,26 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
-from pandas_rust_algos_spark import cachelife
 from pandas_rust_algos_spark.session import local_df
+from pandas_rust_algos_spark.operators.ann_portable import (
+    _codes,
+    _ivfpq_rank,
+    _lit_lmatrix,
+    _points,
+    _residual_probes,
+    _train_ivfpq,
+)
 from pandas_rust_algos_spark.operators.similarity import (
     _as_double,
+    _check_probe,
+    _check_rerank,
     _lit_matrix,
+    _nearest_cells,
+    _subspaces,
+    _top_k,
+    _train_coarse,
     cosine,
-    dot,
-    norm,
 )
 
 __all__ = ["append_ivf_index", "build_ivf_index", "ivf_index_query",
@@ -46,19 +56,73 @@ __all__ = ["append_ivf_index", "build_ivf_index", "ivf_index_query",
            "build_ivfpq_index_fixed", "ivfpq_index_query_fixed"]
 
 
-def _nearest_cells(cmatrix, vcol, n: int):
-    """Top-n cell ids by dot score as a pure expression (matrix is one
-    plan literal; struct-sort with cell-id tiebreak) — same formulation
-    as similarity.ivf_topk's."""
-    scored = F.transform(
-        cmatrix,
-        lambda c, i: F.struct((-dot(vcol, c)).alias("negd"),
-                              i.alias("cell")),
-    )
-    return F.transform(
-        F.slice(F.array_sort(scored), 1, n),
-        lambda s: s.getField("cell"),
-    )
+def _read_table(path: str) -> list[tuple]:
+    """The rows of a KiB metadata table the build wrote (centroids,
+    sub-books), read on the driver like ``meta.json``: no Spark job,
+    where a Spark read costs a schema job and a collect job."""
+    import pyarrow.parquet as pq
+
+    return [tuple(r.values()) for r in pq.read_table(path).to_pylist()]
+
+
+def _read_index(path: str) -> tuple[dict, list]:
+    """``(meta, centroids)`` of a persisted index: ``meta.json`` plus
+    the centroid table, ordered by cell."""
+    with open(os.path.join(path, "meta.json")) as fh:
+        meta = json.load(fh)
+    rows = _read_table(os.path.join(path, "centroids.parquet"))
+    return meta, [list(c) for _, c in sorted(rows)]
+
+
+def _write_table(spark: SparkSession, path: str, rows: list,
+                 schema: str) -> None:
+    """One parquet file of driver-held metadata rows (the read side is
+    :func:`_read_table`)."""
+    local_df(spark, rows, schema).coalesce(1).write.mode("overwrite") \
+        .parquet(path)
+
+
+def _write_index(spark: SparkSession, path: str, centers: list,
+                 schema: str, meta: dict) -> None:
+    """The index metadata: ``centroids.parquet`` (``(cell, centroid)``
+    rows) and ``meta.json``."""
+    os.makedirs(path, exist_ok=True)
+    _write_table(spark, os.path.join(path, "centroids.parquet"),
+                 list(enumerate(centers)), schema)
+    with open(os.path.join(path, "meta.json"), "w") as fh:
+        json.dump(meta, fh)
+
+
+def _write_cells(frame: DataFrame, path: str, n: int, mode: str) -> None:
+    """Write ``frame`` partitioned by ``cell``, clustered by cell first
+    (guide §6/§8): an un-clustered partitionBy fans every scan task out
+    across all cells — measured 440 files for a 16-cell gate build
+    (scan_tasks × n_cells), and every probe pays the per-file open cost
+    forever after. One payload shuffle at write time is the trade: the
+    index is written once, probed many times. ``n`` sizes the shuffle
+    (≥ n_cells ⇒ ~1 file per cell locally)."""
+    frame.repartition(n, "cell").write.mode(mode).partitionBy("cell") \
+        .parquet(path)
+
+
+def _assign(df: DataFrame, id_col: str, vec_col: str,
+            centers: list) -> DataFrame:
+    """``(id, v, cell)``: each vector routed to its nearest centroid —
+    one narrow map, the matrix riding the plan as a literal."""
+    return df.select(
+        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"),
+    ).withColumn(
+        "cell", _nearest_cells(_lit_matrix(centers), F.col("v"), 1)[0])
+
+
+def _probed_cells(probes: DataFrame) -> list[int]:
+    """The probed cell ids, resolved DRIVER-side (one tiny collect over
+    the query batch) so the cell filter is a plan literal and Spark
+    prunes ``cell=`` partitions at file-listing time. The probes frame
+    is not persisted: the scoring join recomputes it from the
+    metadata-sized query batch, cheaper than caching it for one read."""
+    return sorted(
+        {r["cell"] for r in probes.select("cell").distinct().collect()})
 
 
 def build_ivf_index(
@@ -73,60 +137,21 @@ def build_ivf_index(
     max_train_rows: int = 100_000,
     write_partitions: int | None = None,
 ) -> dict:
-    """Train, assign, and persist; returns the meta dict."""
-    from pandas_rust_algos_spark.operators.similarity import (
-        _collect_vecs,
-        _kmeans_local,
-    )
-
+    """Train, assign, and persist; returns the meta dict.
+    ``write_partitions`` sizes the cell-clustering shuffle (default
+    ``n_cells``; at real scale pass ≈ corpus_bytes / 512 MB so big
+    cells split into several near-target files)."""
     cand = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-
-    # ONE collect job over the bounded sample, then in-driver seeded
-    # k-means++/Lloyd (similarity._kmeans_local: the MLlib fit it
-    # replaces ran ~25 scheduler-bound jobs over a KiB sample; the
-    # sample is O(1) in corpus size by construction, so in-process
-    # training is the FAISS-shaped scale answer). Unit normalization
-    # happens inside the trainer (directional cells, as before).
-    vs = _collect_vecs(
-        cand.sample(fraction=min(1.0, train_fraction), seed=seed)
-        .limit(max_train_rows).select("v")
-    )
-    if len(vs) < n_cells * 10:
-        vs = _collect_vecs(cand.limit(max_train_rows).select("v"))
-    centers = _kmeans_local(vs, k=n_cells, seed=seed, normalize=True)
-
-    spark = df.sparkSession
-    os.makedirs(path, exist_ok=True)
-    local_df(
-        spark, [(i, c) for i, c in enumerate(centers)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(path, "centroids.parquet"))
-
-    cmatrix = _lit_matrix(centers)
-    assigned = cand.select(
-        F.col(id_col).alias("id"),
-        F.col("v"),
-        _nearest_cells(cmatrix, F.col("v"), 1)[0].alias("cell"),
-    )
-    # Cluster rows by cell BEFORE the partitioned write (guide §6/§8):
-    # an un-clustered partitionBy fans every scan task out across all
-    # cells — measured 440 files for a 16-cell gate build (scan_tasks ×
-    # n_cells), and every probe pays the per-file open cost forever
-    # after. One payload shuffle at build time is the worked-example
-    # trade: the index is written once, probed many times.
-    # ``write_partitions`` sizes the shuffle (≥ n_cells ⇒ ~1 file per
-    # cell locally; at real scale pass ≈ corpus_bytes / 512 MB so big
-    # cells split into several near-target files).
-    n_write = write_partitions or n_cells
-    assigned.repartition(n_write, "cell") \
-        .write.mode("overwrite").partitionBy("cell") \
-        .parquet(os.path.join(path, "cells"))
-
+    centers = _train_coarse(cand, n_cells, seed=seed,
+                            train_fraction=train_fraction,
+                            max_train_rows=max_train_rows)
+    _write_cells(_assign(df, id_col, vec_col, centers),
+                 os.path.join(path, "cells"),
+                 write_partitions or n_cells, "overwrite")
     meta = {"n_cells": n_cells, "seed": seed, "id_col": id_col,
             "vec_col": vec_col, "dims": len(centers[0])}
-    with open(os.path.join(path, "meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    _write_index(df.sparkSession, path, centers,
+                 "cell int, centroid array<double>", meta)
     return meta
 
 
@@ -143,33 +168,13 @@ def append_ivf_index(df: DataFrame, path: str) -> dict:
     build is one k-means + one partitioned write) to re-balance.
 
     Scale shape: the centroid matrix rides the assignment projection
-    as a plan literal / broadcast row (``_lit_matrix`` switches at the
-    same size threshold as ``similarity``), so the append is a single
-    narrow pass over the new vectors plus the ``partitionBy(cell)``
-    write — no shuffle of the existing corpus, no driver data."""
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
-    spark = df.sparkSession
-    centers = (
-        spark.read.parquet(os.path.join(path, "centroids.parquet"))
-        .orderBy("cell").collect()
-    )
-    cmatrix = _lit_matrix([r["centroid"] for r in centers])
-    cand = df.select(
-        F.col(meta["id_col"]),
-        _as_double(F.col(meta["vec_col"])).alias("v"),
-    )
-    assigned = cand.select(
-        F.col(meta["id_col"]).alias("id"),
-        F.col("v"),
-        _nearest_cells(cmatrix, F.col("v"), 1)[0].alias("cell"),
-    )
-    # same cell-clustering as the build write (guide §6): without it
-    # every append multiplies the store's file count by its scan-task
-    # count × n_cells
-    assigned.repartition(meta["n_cells"], "cell") \
-        .write.mode("append").partitionBy("cell") \
-        .parquet(os.path.join(path, "cells"))
+    as one plan literal, so the append is a single narrow pass over
+    the new vectors plus the ``partitionBy(cell)`` write — no shuffle
+    of the existing corpus, no driver data beyond the KiB centroid
+    table."""
+    meta, centers = _read_index(path)
+    _write_cells(_assign(df, meta["id_col"], meta["vec_col"], centers),
+                 os.path.join(path, "cells"), meta["n_cells"], "append")
     return meta
 
 
@@ -226,25 +231,12 @@ def stream_append_ivf_index(
     write — the existing corpus never shuffles, the store is never
     read. Returns the StreamingQuery (caller owns awaitTermination).
     """
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
-    centers = [
-        list(r["centroid"])
-        for r in stream_vecs.sparkSession.read.parquet(
-            os.path.join(path, "centroids.parquet"))
-        .orderBy("cell").collect()
-    ]
+    meta, centers = _read_index(path)
     ingest_path = os.path.join(path, "cells_stream")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        cmatrix = _lit_matrix(centers)
-        assigned = batch_df.select(
-            F.col(meta["id_col"]).alias("id"),
-            _as_double(F.col(meta["vec_col"])).alias("v"),
-        ).select(
-            "id", "v",
-            _nearest_cells(cmatrix, F.col("v"), 1)[0].alias("cell"),
-        )
+        assigned = _assign(batch_df, meta["id_col"], meta["vec_col"],
+                           centers)
         # per-writer option, NOT a session-global conf toggle: this
         # module coexists with ThreadPoolExecutor-concurrent Spark jobs
         # (similarity.py), and a set/restore on the shared session could
@@ -286,31 +278,17 @@ def ivf_index_query(
     plan literal and Spark prunes ``cell=`` partitions at file-listing
     time: the corpus scan opens only the probed directories.
     """
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
-    if not 1 <= n_probe <= meta["n_cells"]:
-        raise ValueError(
-            f"n_probe must be in [1, {meta['n_cells']}], got {n_probe}")
-    centers = (
-        spark.read.parquet(os.path.join(path, "centroids.parquet"))
-        .orderBy("cell").collect()
-    )
-    cmatrix = _lit_matrix([r["centroid"] for r in centers])
-
-    # persisted for the probed-cell collect below AND the broadcast
-    # scoring join in the returned plan → tracked for deferred release
-    probes = cachelife.track(queries.select(
+    meta, centers = _read_index(path)
+    _check_probe(n_probe, meta["n_cells"])
+    probes = queries.select(
         F.col(query_id_col).alias("qid"),
         _as_double(F.col(vec_col)).alias("qv"),
     ).withColumn(
-        "cell", F.explode(_nearest_cells(cmatrix, F.col("qv"), n_probe))
-    ).persist())
-    probed_cells = sorted(
-        {r["cell"] for r in probes.select("cell").distinct().collect()}
+        "cell", F.explode(
+            _nearest_cells(_lit_matrix(centers), F.col("qv"), n_probe))
     )
-
     cells = _read_cells(spark, path).where(
-        F.col("cell").isin(probed_cells))
+        F.col("cell").isin(_probed_cells(probes)))
     sim = F.round(cosine(F.col("qv"), F.col("v")), round_digits)
     scored = (
         cells.join(F.broadcast(probes), "cell")
@@ -318,10 +296,7 @@ def ivf_index_query(
         .select(F.col("qid").alias(query_id_col), "id", sim.alias("sim"))
         .distinct()
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("id"))
-    return scored.withColumn("rank", F.row_number().over(w)) \
-        .where(F.col("rank") <= k)
+    return _top_k(scored, k, query_id_col, "id", F.col("sim").desc())
 
 
 def build_ivfpq_index_fixed(
@@ -356,77 +331,34 @@ def build_ivfpq_index_fixed(
     storage layout, cell routing, and ADC math are all value-provable.
 
     Build cost: the ``ivfpq_topk_fixed`` training passes (coarse
-    driver-coordinated Lloyd, residuals checkpointed once, m residual
-    sub-book trainings) plus one ``partitionBy(cell)`` write of the
-    m-int code rows — the single intended shuffle; it IS the index."""
-    from pandas_rust_algos_spark.operators.ann_portable import (
-        _argmin_cell,
-        _lit_lmatrix,
-        _train_centroids,
-    )
-    from pandas_rust_algos_spark.operators.kmeans import _quantize
-    from pandas_rust_algos_spark.operators.similarity import probe_dims
-
-    if dims is None:
-        dims = probe_dims(df, vec_col)
-    if dims == 0 or dims % m != 0:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sub = dims // m
-    pts = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
-    coarse = _train_centroids(pts, id_col, k=n_cells, iters=iters)[0]
-    cmatrix = _lit_lmatrix(coarse)
-    asg = (
-        pts.withColumn("cell", _argmin_cell(F.col("v"), cmatrix))
-        .withColumn(
-            "r",
-            F.zip_with("v", F.element_at(cmatrix, F.col("cell") + 1),
-                       lambda a, b: a - b))
-        .localCheckpoint(eager=True)
-    )
-
-    # m residual sub-books in LOCKSTEP (one seed job + one combined
-    # partial-sum job per iteration; bit-identical per book)
-    books = _train_centroids(
-        asg.select(id_col, F.col("r").alias("v")), id_col,
-        k=k_codes, iters=iters,
-        specs=[(j * sub + 1, sub, f":{j}") for j in range(m)])
+    driver-coordinated Lloyd, residuals persisted lazily and released
+    after the codes write, m residual sub-book trainings) plus one
+    ``partitionBy(cell)`` write of the m-int code rows — the single
+    intended shuffle; it IS the index."""
+    sub = _subspaces(df, vec_col, dims, m)
+    coarse, asg, books = _train_ivfpq(
+        _points(df, id_col, vec_col), id_col, n_cells=n_cells, m=m,
+        sub=sub, k_codes=k_codes, iters=iters)
     bmats = [_lit_lmatrix(b) for b in books]
-
+    try:
+        _write_cells(
+            asg.select(
+                F.col(id_col).alias("id"),
+                F.array(*[c.cast("int") for c in _codes("r", bmats, sub)])
+                .alias("codes"),
+                "cell"),
+            os.path.join(path, "codes"), n_cells, "overwrite")
+    finally:
+        asg.unpersist()
     spark = df.sparkSession
-    os.makedirs(path, exist_ok=True)
-    local_df(
-        spark, [(i, c) for i, c in enumerate(coarse)],
-        "cell int, c array<long>",
-    ).coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(path, "centroids.parquet"))
-    local_df(
-        spark,
+    _write_table(
+        spark, os.path.join(path, "books.parquet"),
         [(j, i, c) for j, b in enumerate(books) for i, c in enumerate(b)],
-        "j int, code int, c array<long>",
-    ).coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(path, "books.parquet"))
-
-    coded = asg.select(
-        F.col(id_col).alias("id"),
-        F.array(*[
-            _argmin_cell(F.slice("r", j * sub + 1, sub), bmats[j])
-            .cast("int")
-            for j in range(m)
-        ]).alias("codes"),
-        "cell",
-    )
-    # cell-clustered write, as in build_ivf_index (guide §6): one code
-    # file per cell instead of scan_tasks × n_cells tiny files
-    coded.repartition(n_cells, "cell") \
-        .write.mode("overwrite").partitionBy("cell") \
-        .parquet(os.path.join(path, "codes"))
-
+        "j int, code int, c array<long>")
     meta = {"n_cells": n_cells, "m": m, "k_codes": k_codes,
-            "iters": iters, "dims": dims, "id_col": id_col,
+            "iters": iters, "dims": sub * m, "id_col": id_col,
             "vec_col": vec_col, "mode": "fixed"}
-    with open(os.path.join(path, "meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    _write_index(spark, path, coarse, "cell int, c array<long>", meta)
     return meta
 
 
@@ -461,110 +393,29 @@ def ivfpq_index_query_fixed(
     centroids and sub-books ride the scoring plan as literals. I/O
     per query batch is ~``n_probe/n_cells`` of an already-~700×-
     compressed code table."""
-    from pandas_rust_algos_spark.operators.ann_portable import (
-        _dist_sq,
-        _lit_lmatrix,
-        _top_cells,
-    )
-    from pandas_rust_algos_spark.operators.kmeans import _quantize
-
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
-    if not 1 <= n_probe <= meta["n_cells"]:
+    meta, coarse = _read_index(path)
+    _check_probe(n_probe, meta["n_cells"])
+    _check_rerank(rerank_k, k, "rerank_k")
+    if rerank_k is not None and vectors is None:
         raise ValueError(
-            f"n_probe must be in [1, {meta['n_cells']}], got {n_probe}")
-    if rerank_k is not None:
-        if rerank_k < k:
-            raise ValueError(f"rerank_k ({rerank_k}) must be >= k ({k})")
-        if vectors is None:
-            raise ValueError(
-                "rerank_k needs the raw vector table (vectors=...): "
-                "the persisted index stores only PQ codes")
-    m, dims = meta["m"], meta["dims"]
-    sub = dims // m
-    coarse = sorted(
-        (r["cell"], list(r["c"])) for r in spark.read.parquet(
-            os.path.join(path, "centroids.parquet")).collect())
-    cmatrix = _lit_lmatrix([c for _, c in coarse])
-    brows = spark.read.parquet(os.path.join(path, "books.parquet")) \
-        .collect()
-    books = {}
-    for r in brows:
-        books.setdefault(r["j"], {})[r["code"]] = list(r["c"])
-    bmats = [
-        _lit_lmatrix([books[j][i] for i in sorted(books[j])])
-        for j in range(m)
-    ]
-
-    probes = (
-        queries.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(query_id_col).alias("__qid"),
-            _quantize(F.col(vec_col)).alias("qv"),
-        )
-        .withColumn(
-            "cell", F.explode(_top_cells(F.col("qv"), cmatrix, n_probe)))
-        .withColumn(
-            "qr",
-            F.zip_with("qv", F.element_at(cmatrix, F.col("cell") + 1),
-                       lambda a, b: a - b))
-        .persist()
-    )
-    try:
-        probed = sorted(
-            {r["cell"] for r in probes.select("cell").distinct().collect()})
-    finally:
-        # release the cached plan once the probed-cell set is known —
-        # a query entry point must not leak session-lifetime cache
-        # (r8 ADVICE); the scoring join below recomputes probes from
-        # the metadata-sized query batch at execution, which is
-        # cheaper than pinning a cache entry per call
-        probes.unpersist()
+            "rerank_k needs the raw vector table (vectors=...): "
+            "the persisted index stores only PQ codes")
+    m = meta["m"]
+    sub = meta["dims"] // m
+    books: list[list] = [[] for _ in range(m)]
+    for j, code, c in sorted(
+            _read_table(os.path.join(path, "books.parquet"))):
+        books[j].append(c)
+    bmats = [_lit_lmatrix(b) for b in books]
+    probes = _residual_probes(queries, query_id_col, vec_col,
+                              _lit_lmatrix(coarse), n_probe)
     codes = (
         spark.read.parquet(os.path.join(path, "codes"))
-        .where(F.col("cell").isin(probed))
+        .where(F.col("cell").isin(_probed_cells(probes)))
     )
-    approx = None
-    for j in range(m):
-        dj = _dist_sq(
-            F.slice("qr", j * sub + 1, sub),
-            F.element_at(bmats[j], F.element_at("codes", j + 1) + 1),
-        )
-        approx = dj if approx is None else approx + dj
-    scored = (
-        codes.join(F.broadcast(probes), "cell")
-        .where(F.col("__qid") != F.col("id"))
-        .select(
-            F.col("__qid").alias(query_id_col),
-            "id",
-            approx.alias("approx_dist_sq"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy("approx_dist_sq", "id")
-    ranked = scored.withColumn(
-        "rank", F.row_number().over(w).cast("long"))
-    if rerank_k is None:
-        return ranked.where(F.col("rank") <= k)
-    short = ranked.where(F.col("rank") <= rerank_k) \
-        .select(query_id_col, "id")
-    cvec = vectors.where(F.col(meta["vec_col"]).isNotNull()).select(
-        F.col(meta["id_col"]).alias("id"),
-        _quantize(F.col(meta["vec_col"])).alias("__cv"),
-    )
-    qvec = queries.where(F.col(vec_col).isNotNull()).select(
-        F.col(query_id_col).alias("__rqid"),
-        _quantize(F.col(vec_col)).alias("__qv"),
-    )
-    exact = (
-        short.join(cvec, "id")
-        .join(F.broadcast(qvec), F.col(query_id_col) == F.col("__rqid"))
-        .select(
-            query_id_col, "id",
-            _dist_sq(F.col("__qv"), F.col("__cv")).alias("dist_sq"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy("dist_sq", "id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .where(F.col("rank") <= k)
-    )
+    vecs = None if vectors is None else _points(
+        vectors, meta["id_col"], meta["vec_col"],
+    ).withColumnRenamed(meta["id_col"], "id")
+    return _ivfpq_rank(codes, probes, bmats, sub, k, rerank_k, vecs,
+                       queries, query_id_col=query_id_col,
+                       vec_col=vec_col, id_col="id")

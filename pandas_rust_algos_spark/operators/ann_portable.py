@@ -3,12 +3,12 @@ neighbor search — the oracle-able twins of ``similarity.ivf_topk`` /
 ``similarity.pq_topk``.
 
 Why these exist: the production ANN paths train their quantizers with
-MLlib float k-means, whose centroids are accumulation-order-dependent
-— legitimate engine-specific results, hence their gates were rows-only
-(recall-tested, not value-hashed). This module swaps exactly one
-ingredient — the quantizer — for :func:`kmeans.kmeans_fixed`'s
-fixed-point Lloyd iterations, and keeps EVERY quantity on the integer
-micro-unit grid:
+float k-means (``similarity._kmeans_local``, in-driver over a sample)
+and score in floating point — legitimate engine-specific results,
+hence their gates are rows-only (recall-tested, not value-hashed).
+This module swaps the quantizer for the fixed-point Lloyd trainer
+(:func:`_train_centroids`, which :func:`kmeans.kmeans_fixed` also
+runs) and keeps EVERY quantity on the integer micro-unit grid:
 
 - vectors quantize once to ``floor(x·1e6)`` longs;
 - coarse-cell assignment, probe selection, PQ sub-codebook training,
@@ -47,7 +47,8 @@ Scale shape (both ops):
 - Search is one broadcast join of the exploded query probes onto the
   corpus cells (IVF: touches ~n_probe/n_cells of the corpus) or one
   broadcast of the query score context onto the m-byte code table
-  (PQ), then the standard per-query rank window.
+  (PQ), then the per-query rank window and shortlist rerank shared
+  with the float tiers (``similarity._top_k`` / ``_rerank``).
 
 Reference scope: no ANN surface exists in the reference (SURVEY
 §2.3) — driver-brief training-pipeline extension (VERDICT r6 next-#3
@@ -56,7 +57,7 @@ prescribed exactly this construction).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pandas_rust_algos_spark import cachelife
@@ -66,7 +67,13 @@ from pandas_rust_algos_spark.operators.kmeans import (
     sql_kmeans_fixed_ctes,
     sql_quantize,
 )
-from pandas_rust_algos_spark.operators.similarity import probe_dims
+from pandas_rust_algos_spark.operators.similarity import (
+    _check_probe,
+    _check_rerank,
+    _rerank,
+    _subspaces,
+    _top_k,
+)
 
 __all__ = [
     "ivf_topk_fixed",
@@ -135,6 +142,32 @@ def _top_cells(vcol: Column, cmatrix: Column, n: int) -> Column:
         F.slice(F.array_sort(_cells_scored(vcol, cmatrix)), 1, n),
         lambda s: s.getField("cell"),
     )
+
+
+def _codes(col: str, books: list[Column], sub: int) -> list[Column]:
+    """PQ encoding: per subspace ``j``, the nearest sub-centroid of
+    ``books[j]`` to the ``j``-th ``sub``-wide slice of ``col``."""
+    return [_argmin_cell(F.slice(col, j * sub + 1, sub), b)
+            for j, b in enumerate(books)]
+
+
+def _adc(qcol: str, books: list[Column], sub: int) -> Column:
+    """The exact-integer ADC distance of a coded row,
+    ``Σ_j d²(qcol_sub_j, books[j][codes[j]])``, summed left to right."""
+    approx = None
+    for j, b in enumerate(books):
+        dj = _dist_sq(
+            F.slice(qcol, j * sub + 1, sub),
+            F.element_at(b, F.element_at("codes", j + 1) + 1),
+        )
+        approx = dj if approx is None else approx + dj
+    return approx
+
+
+def _residuals(vcol: str, cmatrix: Column) -> Column:
+    """``vcol`` minus its ``cell``'s centroid, element-wise."""
+    return F.zip_with(vcol, F.element_at(cmatrix, F.col("cell") + 1),
+                      lambda a, b: a - b)
 
 
 #: Above this many scan tasks, the Lloyd trainer folds its per-task
@@ -349,6 +382,97 @@ def _train_centroids(
     return books
 
 
+def _points(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(id_col, v)``: the non-null vectors quantized to the grid."""
+    return df.where(F.col(vec_col).isNotNull()).select(
+        F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
+
+
+def _query_points(queries: DataFrame, query_id_col: str,
+                  vec_col: str) -> DataFrame:
+    return queries.where(F.col(vec_col).isNotNull()).select(
+        F.col(query_id_col).alias("__qid"),
+        _quantize(F.col(vec_col)).alias("qv"),
+    )
+
+
+def _train_ivfpq(pts: DataFrame, id_col: str, *, n_cells: int, m: int,
+                 sub: int, k_codes: int, iters: int):
+    """Fixed IVF-PQ training: coarse Lloyd over ``pts``, the residual
+    frame ``asg`` = ``(id, v, cell, r)``, then ``m`` residual sub-books
+    in LOCKSTEP (one seed job + one partial-sum job per iteration for
+    ALL books; bit-identical per book to m separate chains). Returns
+    ``(coarse, asg, books)``.
+
+    ``asg`` feeds the m sub-book trainings AND the caller's encode pass,
+    so it is persisted LAZILY: the first consumer (the lockstep seed
+    job) materializes the cache for the rest, with no dedicated
+    materialization pass (at 100 TB this frame is persisted/written
+    once either way). The caller owns its release once this returns."""
+    coarse = _train_centroids(pts, id_col, k=n_cells, iters=iters)[0]
+    cmatrix = _lit_lmatrix(coarse)
+    asg = (
+        pts.withColumn("cell", _argmin_cell(F.col("v"), cmatrix))
+        .withColumn("r", _residuals("v", cmatrix))
+        .persist()
+    )
+    try:
+        books = _train_centroids(
+            asg.select(id_col, F.col("r").alias("v")), id_col,
+            k=k_codes, iters=iters,
+            specs=[(j * sub + 1, sub, f":{j}") for j in range(m)])
+    except BaseException:
+        asg.unpersist()
+        raise
+    return coarse, asg, books
+
+
+def _residual_probes(queries: DataFrame, query_id_col: str, vec_col: str,
+                     cmatrix: Column, n_probe: int) -> DataFrame:
+    """``(__qid, qv, cell, qr)``: each query exploded onto its
+    ``n_probe`` nearest cells, with its residual against each."""
+    return (
+        _query_points(queries, query_id_col, vec_col)
+        .withColumn(
+            "cell", F.explode(_top_cells(F.col("qv"), cmatrix, n_probe)))
+        .withColumn("qr", _residuals("qv", cmatrix))
+    )
+
+
+def _ivfpq_rank(coded: DataFrame, probes: DataFrame, books: list[Column],
+                sub: int, k: int, rerank_k: int | None, vecs: DataFrame,
+                queries: DataFrame, *, query_id_col: str, vec_col: str,
+                id_col: str) -> DataFrame:
+    """Residual-ADC search of the probed cells' codes: top-k by
+    ``approx_dist_sq``, or — with ``rerank_k`` — the ADC
+    top-``rerank_k`` shortlist re-ranked on exact integer distances
+    (``dist_sq``) against the quantized corpus ``vecs`` (``id_col``,
+    ``v``) and ``queries``. A corpus vector lives in exactly ONE cell,
+    so each (query, candidate) pair surfaces at most once — no
+    distinct pass."""
+    scored = (
+        coded.join(F.broadcast(probes), "cell")
+        .where(F.col("__qid") != F.col(id_col))
+        .select(
+            F.col("__qid").alias(query_id_col),
+            id_col,
+            _adc("qr", books, sub).alias("approx_dist_sq"),
+        )
+    )
+    by = F.col("approx_dist_sq")
+    if rerank_k is None:
+        return _top_k(scored, k, query_id_col, id_col, by, long_rank=True)
+    return _rerank(
+        _top_k(scored, rerank_k, query_id_col, id_col, by, long_rank=True),
+        k, vecs,
+        queries.where(F.col(vec_col).isNotNull()).select(
+            F.col(query_id_col), _quantize(F.col(vec_col)).alias("__qv")),
+        _dist_sq(F.col("__qv"), F.col("v")).alias("dist_sq"),
+        F.col("dist_sq"),
+        query_id_col=query_id_col, id_col=id_col, long_rank=True,
+    )
+
+
 def ivf_topk_fixed(
     df: DataFrame,
     queries: DataFrame,
@@ -370,24 +494,14 @@ def ivf_topk_fixed(
     Every corpus vector lands in exactly ONE cell, so the probe join
     yields each (query, candidate) pair at most once — no distinct
     pass needed (unlike LSH bands)."""
-    if n_probe < 1 or n_probe > n_cells:
-        raise ValueError(f"need 1 <= n_probe <= n_cells, got "
-                         f"{n_probe}/{n_cells}")
-    pts = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
+    _check_probe(n_probe, n_cells)
+    pts = _points(df, id_col, vec_col)
     cmatrix = _lit_lmatrix(_train_centroids(
         pts, id_col, k=n_cells, iters=iters)[0])
 
     corpus = pts.withColumn("cell", _argmin_cell(F.col("v"), cmatrix))
-    probes = (
-        queries.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(query_id_col).alias("__qid"),
-            _quantize(F.col(vec_col)).alias("qv"),
-        )
-        .withColumn(
-            "cell", F.explode(_top_cells(F.col("qv"), cmatrix, n_probe)))
-    )
+    probes = _query_points(queries, query_id_col, vec_col).withColumn(
+        "cell", F.explode(_top_cells(F.col("qv"), cmatrix, n_probe)))
     scored = (
         corpus.join(F.broadcast(probes), "cell")
         .where(F.col("__qid") != F.col(id_col))
@@ -397,12 +511,8 @@ def ivf_topk_fixed(
             _dist_sq(F.col("qv"), F.col("v")).alias("dist_sq"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy("dist_sq", id_col)
-    return (
-        scored.withColumn(
-            "rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, query_id_col, id_col, F.col("dist_sq"),
+                  long_rank=True)
 
 
 def pq_topk_fixed(
@@ -425,13 +535,8 @@ def pq_topk_fixed(
     Returns ``(query_id, vec_id, approx_dist_sq, rank)``. Pass
     ``dims`` (the FAISS convention) to skip the fallback width-probe
     job (r8 VERDICT next-#5)."""
-    if dims is None:
-        dims = probe_dims(df, vec_col)
-    if dims == 0 or dims % m != 0:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sub = dims // m
-    pts = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
+    sub = _subspaces(df, vec_col, dims, m)
+    pts = _points(df, id_col, vec_col)
 
     # the m sub-codebook trainings are independent and share every
     # corpus scan — train them in LOCKSTEP (one seed job + one
@@ -442,41 +547,21 @@ def pq_topk_fixed(
         specs=[(j * sub + 1, sub, f":{j}") for j in range(m)])]
 
     coded = pts.select(
-        id_col,
-        F.array(*[
-            _argmin_cell(F.slice("v", j * sub + 1, sub), books[j])
-            for j in range(m)
-        ]).alias("codes"),
-    )
+        id_col, F.array(*_codes("v", books, sub)).alias("codes"))
     # the query side precomputes nothing float: approx distance is a
     # direct exact-integer sum over the chosen sub-centroids
-    qs = queries.where(F.col(vec_col).isNotNull()).select(
-        F.col(query_id_col).alias("__qid"),
-        _quantize(F.col(vec_col)).alias("qv"),
-    )
-    approx = None
-    for j in range(m):
-        dj = _dist_sq(
-            F.slice("qv", j * sub + 1, sub),
-            F.element_at(books[j], F.element_at("codes", j + 1) + 1),
-        )
-        approx = dj if approx is None else approx + dj
     scored = (
-        coded.crossJoin(F.broadcast(qs))
+        coded.crossJoin(F.broadcast(
+            _query_points(queries, query_id_col, vec_col)))
         .where(F.col("__qid") != F.col(id_col))
         .select(
             F.col("__qid").alias(query_id_col),
             id_col,
-            approx.alias("approx_dist_sq"),
+            _adc("qv", books, sub).alias("approx_dist_sq"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        "approx_dist_sq", id_col)
-    return (
-        scored.withColumn(
-            "rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, query_id_col, id_col,
+                  F.col("approx_dist_sq"), long_rank=True)
 
 
 def ivfpq_topk_fixed(
@@ -522,129 +607,31 @@ def ivfpq_topk_fixed(
     back to the vectors) and the output becomes
     ``(query_id, vec_id, dist_sq, rank)`` — still fully oracled.
 
-    Scale shape: coarse training as in :func:`ivf_topk_fixed`
-    (driver-coordinated Lloyd, k×dim partial-sum traffic/iter);
-    residuals are computed once as a zero-exchange map and LAZILY
-    persisted — the first consumer (the lockstep seed job)
-    materializes the cache for the rest (at 100 TB: persisted/written
-    once) — before the m
-    sub-codebook trainings scan them; both centroid sets are METADATA
-    riding the search plan as literals; search is one broadcast join
-    of the exploded query probes onto the coded corpus cells. The
-    float MLlib composition is :func:`similarity.ivfpq_topk`."""
-    if n_probe < 1 or n_probe > n_cells:
-        raise ValueError(f"need 1 <= n_probe <= n_cells, got "
-                         f"{n_probe}/{n_cells}")
-    if dims is None:
-        dims = probe_dims(df, vec_col)
-    if dims == 0 or dims % m != 0:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sub = dims // m
-    pts = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), _quantize(F.col(vec_col)).alias("v"))
-    cmatrix = _lit_lmatrix(_train_centroids(
-        pts, id_col, k=n_cells, iters=iters)[0])
-
-    asg = (
-        pts.withColumn("cell", _argmin_cell(F.col("v"), cmatrix))
-        .withColumn(
-            "r",
-            F.zip_with(
-                "v", F.element_at(cmatrix, F.col("cell") + 1),
-                lambda a, b: a - b),
-        )
-        # reused by m sub-codebook trainings AND the encode pass —
-        # persist() (lazy) rather than an EAGER localCheckpoint: the
-        # first consumer (the lockstep seed job) materializes the
-        # cache for the rest, so no dedicated materialization job is
-        # paid (the gates are job-latency-bound; at 100 TB this frame
-        # is persisted/written once either way). The encode pass rides
-        # the RETURNED plan → tracked for deferred release.
-        .persist()
-    )
+    Scale shape: training is :func:`_train_ivfpq` (driver-coordinated
+    Lloyd, k×dim partial-sum traffic/iter; the residual frame is
+    computed once as a zero-exchange map and lazily persisted); both
+    centroid sets are METADATA riding the search plan as literals;
+    search is one broadcast join of the exploded query probes onto the
+    coded corpus cells. The float composition is
+    :func:`similarity.ivfpq_topk`."""
+    _check_probe(n_probe, n_cells)
+    _check_rerank(rerank_k, k, "rerank_k")
+    sub = _subspaces(df, vec_col, dims, m)
+    pts = _points(df, id_col, vec_col)
+    coarse, asg, books = _train_ivfpq(
+        pts, id_col, n_cells=n_cells, m=m, sub=sub, k_codes=k_codes,
+        iters=iters)
+    # the encode pass rides the RETURNED plan → tracked for deferred
+    # release
     asg = cachelife.track(asg)
-
-    # m residual sub-books in LOCKSTEP over the lazily persisted
-    # assignments (one seed job + one partial-sum job per iteration
-    # for ALL books; bit-identical per book to m separate chains)
-    res = asg.select(id_col, F.col("r").alias("v"))
-    books = [_lit_lmatrix(b) for b in _train_centroids(
-        res, id_col, k=k_codes, iters=iters,
-        specs=[(j * sub + 1, sub, f":{j}") for j in range(m)])]
-
+    bmats = [_lit_lmatrix(b) for b in books]
     coded = asg.select(
-        id_col,
-        "cell",
-        F.array(*[
-            _argmin_cell(F.slice("r", j * sub + 1, sub), books[j])
-            for j in range(m)
-        ]).alias("codes"),
-    )
-    probes = (
-        queries.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(query_id_col).alias("__qid"),
-            _quantize(F.col(vec_col)).alias("qv"),
-        )
-        .withColumn(
-            "cell", F.explode(_top_cells(F.col("qv"), cmatrix, n_probe)))
-        .withColumn(
-            "qr",
-            F.zip_with(
-                "qv", F.element_at(cmatrix, F.col("cell") + 1),
-                lambda a, b: a - b),
-        )
-    )
-    approx = None
-    for j in range(m):
-        dj = _dist_sq(
-            F.slice("qr", j * sub + 1, sub),
-            F.element_at(books[j], F.element_at("codes", j + 1) + 1),
-        )
-        approx = dj if approx is None else approx + dj
-    scored = (
-        coded.join(F.broadcast(probes), "cell")
-        .where(F.col("__qid") != F.col(id_col))
-        .select(
-            F.col("__qid").alias(query_id_col),
-            id_col,
-            approx.alias("approx_dist_sq"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        "approx_dist_sq", id_col)
-    ranked = scored.withColumn(
-        "rank", F.row_number().over(w).cast("long"))
-    if rerank_k is None:
-        return ranked.where(F.col("rank") <= k)
-    if rerank_k < k:
-        raise ValueError(f"rerank_k ({rerank_k}) must be >= k ({k})")
-    # exact pass over the ADC shortlist only (the float composition's
-    # rerank option, ported to the integer grid — r8 VERDICT next-#4):
-    # |queries|·rerank_k rows join back to the integer vectors, exact
-    # BIGINT distances re-rank, top-k out. ADC quantization error can
-    # demote a true neighbor below a coarser code's score; the exact
-    # pass restores it whenever it survives into the shortlist.
-    short = ranked.where(F.col("rank") <= rerank_k) \
-        .select(query_id_col, id_col)
-    qs_exact = queries.where(F.col(vec_col).isNotNull()).select(
-        F.col(query_id_col).alias("__qid"),
-        _quantize(F.col(vec_col)).alias("__qv"),
-    )
-    exact = (
-        short.join(pts, id_col)
-        .join(F.broadcast(qs_exact),
-              F.col(query_id_col) == F.col("__qid"))
-        .select(
-            query_id_col, id_col,
-            _dist_sq(F.col("__qv"), F.col("v")).alias("dist_sq"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy("dist_sq", id_col)
-    return (
-        exact.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .where(F.col("rank") <= k)
-    )
+        id_col, "cell", F.array(*_codes("r", bmats, sub)).alias("codes"))
+    probes = _residual_probes(queries, query_id_col, vec_col,
+                              _lit_lmatrix(coarse), n_probe)
+    return _ivfpq_rank(coded, probes, bmats, sub, k, rerank_k, pts,
+                       queries, query_id_col=query_id_col,
+                       vec_col=vec_col, id_col=id_col)
 
 
 _SQL_QDIST = ("LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(q.qv) + 1), "
@@ -731,9 +718,7 @@ def sql_pq_topk_fixed(
     (namespaced CTEs, per-subspace seed salt), exact integer encoding,
     and the same ADC sum — ``dims`` must be supplied (the SQL cannot
     probe the schema) and divisible by ``m``."""
-    if dims % m != 0:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sub = dims // m
+    sub = _subspaces(None, vec_col, dims, m)
     ctes = [f"""pts AS MATERIALIZED (
       SELECT {id_col}, {sql_quantize(vec_col)} AS v
       FROM {table} WHERE {vec_col} IS NOT NULL
@@ -808,9 +793,8 @@ def sql_ivfpq_topk_fixed(
     only — the whole composed retrieval unrolled as chained CTEs.
     With ``rerank_k``, the ADC top-``rerank_k`` shortlist re-scores
     with exact integer distances, mirroring the Spark rerank path."""
-    if dims % m != 0:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sub = dims // m
+    _check_rerank(rerank_k, k, "rerank_k")
+    sub = _subspaces(None, vec_col, dims, m)
     ctes = [f"""pts AS MATERIALIZED (
       SELECT {id_col}, {sql_quantize(vec_col)} AS v
       FROM {table} WHERE {vec_col} IS NOT NULL
@@ -891,8 +875,6 @@ def sql_ivfpq_topk_fixed(
       FROM tot
     ) WHERE rnk <= {k}
     """
-    if rerank_k < k:
-        raise ValueError(f"rerank_k ({rerank_k}) must be >= k ({k})")
     ctes.append(f"""shortlist AS (
       SELECT qid, {id_col} FROM (
         SELECT qid, {id_col}, ROW_NUMBER() OVER (

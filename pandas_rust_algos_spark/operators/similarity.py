@@ -91,7 +91,9 @@ def _lit_matrix(rows) -> Column:
     rs = [[float(x) for x in r] for r in rows]
     if not rs or any(not r for r in rs) or not all(
             math.isfinite(x) for r in rs for x in r):
-        return F.lit(rs)  # empty/degenerate/non-finite: rare, tiny
+        # empty/degenerate/non-finite: rare, tiny; typed, so an empty
+        # corpus's centroid matrix still resolves
+        return F.lit(rs).cast("array<array<double>>")
     return F.expr(
         "array(" + ",".join(
             "array(" + ",".join(repr(x) + "D" for x in r) + ")"
@@ -191,6 +193,130 @@ def _kmeans_local(
     return [[float(x) for x in c] for c in C]
 
 
+# ------------------------------------------------- the shared ANN skeleton
+# Every ANN tier (float here, fixed-point in ``ann_portable``, persisted
+# in ``ann_index``) is train → probe → score → (rerank) → top-k; each
+# step below is written once and shared by all of them.
+
+
+def _check_probe(n_probe: int, n_cells: int) -> None:
+    if not 1 <= n_probe <= n_cells:
+        raise ValueError(f"need 1 <= n_probe <= n_cells, got "
+                         f"{n_probe}/{n_cells}")
+
+
+def _check_rerank(rerank: int | None, k: int, name: str = "rerank") -> None:
+    if rerank is not None and rerank < k:
+        raise ValueError(f"{name} ({rerank}) must be >= k ({k})")
+
+
+def _subspaces(df: DataFrame | None, vec_col: str, dims: int | None,
+               m: int) -> int:
+    """PQ subspace width ``dims // m``; ``dims`` is declared (the FAISS
+    convention) or, when ``None``, probed once off the first non-null
+    row. Raises unless ``m`` divides a non-zero ``dims``."""
+    if dims is None:
+        dims = probe_dims(df, vec_col)
+    if dims == 0 or dims % m != 0:
+        raise ValueError(f"dims {dims} not divisible by m={m}")
+    return dims // m
+
+
+def _sample_vecs(frame: DataFrame, col: str, min_rows: int, *, seed: int,
+                 train_fraction: float,
+                 max_train_rows: int) -> list[list[float]]:
+    """The bounded training sample: ONE collect of a seeded
+    ``train_fraction`` sample capped at ``max_train_rows`` (a bare
+    unordered ``limit()``'s row set depends on task completion order —
+    r8 ADVICE), falling back to the first ``max_train_rows`` rows when
+    the sample holds fewer than ``min_rows`` (tiny inputs)."""
+    vs = _collect_vecs(
+        frame.sample(fraction=min(1.0, train_fraction), seed=seed)
+        .limit(max_train_rows).select(col))
+    if len(vs) < min_rows:
+        vs = _collect_vecs(frame.limit(max_train_rows).select(col))
+    return vs
+
+
+def _train_coarse(cand: DataFrame, n_cells: int, *, seed: int,
+                  train_fraction: float,
+                  max_train_rows: int) -> list[list[float]]:
+    """The float coarse quantizer over ``cand``'s ``v`` column: seeded
+    k-means++/Lloyd in-driver on the bounded sample, with vectors
+    unit-normalized so euclidean k-means on the sphere yields
+    directional (spherical-k-means-shaped) cells."""
+    vs = _sample_vecs(cand, "v", n_cells * 10, seed=seed,
+                      train_fraction=train_fraction,
+                      max_train_rows=max_train_rows)
+    return _kmeans_local(vs, k=n_cells, seed=seed, normalize=True)
+
+
+def _sub_books(vs: list[list[float]], *, m: int, sub: int, k_codes: int,
+               seed: int) -> list[list[list[float]]]:
+    """``m`` PQ codebooks, one per contiguous ``sub``-wide column slice
+    of the collected sample, each fit in-driver (book ``j`` seeded
+    ``seed + j``); ``m`` empty books on an empty sample."""
+    import numpy as np
+
+    X = np.asarray(vs, dtype=np.float64)
+    if X.size == 0:
+        return [[] for _ in range(m)]
+    return [_kmeans_local(X[:, j * sub:(j + 1) * sub].tolist(),
+                          k=k_codes, seed=seed + j)
+            for j in range(m)]
+
+
+def _nearest_cells(cmatrix: Column, vcol: Column, n: int) -> Column:
+    """Top-n cell ids by dot score, wholly inside codegen: the whole
+    centroid matrix is ONE array<array<double>> (a single plan constant
+    or broadcast-row column — expression-tree size is O(1) in
+    n_cells×dims, so realistic dims never hit codegen limits), indexed
+    transform scores each cell, struct sort (-score asc ≡ score desc,
+    cell-id tiebreak), slice. No join, no window, no shuffle."""
+    scored = F.transform(
+        cmatrix,
+        lambda c, i: F.struct((-dot(vcol, c)).alias("negd"), i.alias("cell")),
+    )
+    return F.transform(
+        F.slice(F.array_sort(scored), 1, n),
+        lambda s: s.getField("cell"),
+    )
+
+
+def _top_k(scored: DataFrame, k: int, query_id_col: str, id_col: str,
+           score: Column, *, long_rank: bool = False) -> DataFrame:
+    """The one per-query rank window: ``row_number`` over
+    ``query_id_col`` ordered by ``score`` then ``id_col``, rows with
+    rank ``<= k`` kept. Float tiers rank similarities descending with
+    int ranks; the fixed-point tiers rank distances ascending with
+    ``long_rank`` (their oracles' BIGINT)."""
+    rank = F.row_number().over(
+        Window.partitionBy(query_id_col).orderBy(score, F.col(id_col)))
+    return scored.withColumn(
+        "rank", rank.cast("long") if long_rank else rank,
+    ).where(F.col("rank") <= k)
+
+
+def _rerank(short: DataFrame, k: int, vecs: DataFrame, qvecs: DataFrame,
+            score: Column, order: Column, *, query_id_col: str,
+            id_col: str, long_rank: bool = False) -> DataFrame:
+    """Exact pass over an approximate shortlist: each ``short`` pair
+    joins back to its corpus vector (``vecs``, keyed by ``id_col``) and
+    its broadcast query vector (``qvecs``, keyed by ``query_id_col``),
+    is re-scored by the exact ``score`` and re-ranked by ``order`` —
+    |queries|·shortlist rows, a metadata-sized slice of the corpus. ADC
+    quantization error can demote a true neighbor below a coarser
+    code's score; this pass restores it whenever it survives into the
+    shortlist."""
+    exact = (
+        short.select(query_id_col, id_col).join(vecs, id_col)
+        .join(F.broadcast(qvecs), query_id_col)
+        .select(query_id_col, id_col, score)
+    )
+    return _top_k(exact, k, query_id_col, id_col, order,
+                  long_rank=long_rank)
+
+
 def cosine_topk(
     df: DataFrame,
     queries: DataFrame,
@@ -218,13 +344,7 @@ def cosine_topk(
         .where(F.col("qid") != F.col(id_col))
         .select(F.col("qid").alias(query_id_col), F.col(id_col), sim.alias("sim"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, query_id_col, id_col, F.col("sim").desc())
 
 
 def hard_negative_topk(
@@ -269,13 +389,7 @@ def hard_negative_topk(
         .select(F.col("qid").alias(query_id_col), F.col(id_col),
                 F.col("__lbl").alias(label_col), sim.alias("sim"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, query_id_col, id_col, F.col("sim").desc())
 
 
 def _plane_weight(p: int, d: int) -> float:
@@ -298,12 +412,7 @@ def lsh_signature(vec: Column, *, planes: int = 16, dims: int = 64) -> Column:
     codegen'd expression."""
     bits = []
     for p in range(planes):
-        weights = _lit_vec(_plane_weight(p, d) for d in range(dims))
-        proj = F.aggregate(
-            F.zip_with(vec, weights, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        proj = dot(vec, _lit_vec(_plane_weight(p, d) for d in range(dims)))
         bits.append(
             F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p))
             .otherwise(F.lit(0).cast("long"))
@@ -371,10 +480,7 @@ def lsh_topk(
         .select(query_id_col, id_col, sim.alias("sim"))
         .distinct()
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _top_k(cand, k, query_id_col, id_col, F.col("sim").desc())
 
 
 def ivf_topk(
@@ -419,21 +525,11 @@ def ivf_topk(
     Unlike LSH, cell quality adapts to the data distribution, which is
     why IVF wins on clustered embeddings.
     """
+    _check_probe(n_probe, n_cells)
     cand = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-
-    # ONE collect job over the bounded sample, then in-driver seeded
-    # k-means++/Lloyd (``_kmeans_local``): the previous MLlib fit ran
-    # ~25 scheduler-bound jobs over this same KiB-sized sample.
-    # Normalization happens in NumPy (unit vectors ⇒ directional,
-    # spherical-k-means-shaped cells, as before).
-    vs = _collect_vecs(
-        cand.sample(fraction=min(1.0, train_fraction), seed=seed)
-        .limit(max_train_rows).select("v")
-    )
-    if len(vs) < n_cells * 10:
-        vs = _collect_vecs(cand.limit(max_train_rows).select("v"))
-    centers = list(enumerate(_kmeans_local(
-        vs, k=n_cells, seed=seed, normalize=True)))
+    matrix_vals = _train_coarse(cand, n_cells, seed=seed,
+                                train_fraction=train_fraction,
+                                max_train_rows=max_train_rows)
 
     # Centroids normally ride the plan as ONE array<array<double>>
     # literal — zero exchange, zero shipped state. Past a size
@@ -442,8 +538,7 @@ def ivf_topk(
     # the matrix instead rides as a single broadcast ROW cross-joined
     # onto both sides: the expression tree stays O(1) and the doubles
     # move as broadcast data, not plan text.
-    dims = len(centers[0][1]) if centers else 0
-    matrix_vals = [c for _, c in centers]
+    dims = len(matrix_vals[0]) if matrix_vals else 0
     as_broadcast_row = n_cells * dims > _CENTROID_LITERAL_MAX
     if as_broadcast_row:
         from pyspark.sql.types import (
@@ -459,26 +554,10 @@ def ivf_topk(
     else:
         cmatrix = _lit_matrix(matrix_vals)
 
-    def nearest_cells_expr(vcol: Column, n: int) -> Column:
-        """Top-n cell ids by dot score, wholly inside codegen: the whole
-        centroid matrix is ONE array<array<double>> literal (a single
-        plan constant — expression-tree size is O(1) in n_cells×dims, so
-        realistic dims never hit codegen limits), indexed transform
-        scores each cell, struct sort (-score asc ≡ score desc, cell-id
-        tiebreak), slice. No join, no window, no shuffle."""
-        scored = F.transform(
-            cmatrix,
-            lambda c, i: F.struct((-dot(vcol, c)).alias("negd"), i.alias("cell")),
-        )
-        return F.transform(
-            F.slice(F.array_sort(scored), 1, n),
-            lambda s: s.getField("cell"),
-        )
-
     if as_broadcast_row:
         cand = cand.crossJoin(F.broadcast(cm_df))
     assigned = cand.withColumn(
-        "cell", nearest_cells_expr(F.col("v"), 1)[0]
+        "cell", _nearest_cells(cmatrix, F.col("v"), 1)[0]
     )
     probes = queries.select(
         F.col(query_id_col).alias("qid"),
@@ -488,7 +567,7 @@ def ivf_topk(
         assigned = assigned.drop("__cmatrix")
         probes = probes.crossJoin(F.broadcast(cm_df))
     probes = probes.withColumn(
-        "cell", F.explode(nearest_cells_expr(F.col("qv"), n_probe)))
+        "cell", F.explode(_nearest_cells(cmatrix, F.col("qv"), n_probe)))
     if as_broadcast_row:
         probes = probes.drop("__cmatrix")
     sim = F.round(cosine(F.col("qv"), F.col("v")), round_digits)
@@ -498,8 +577,7 @@ def ivf_topk(
         .select(F.col("qid").alias(query_id_col), id_col, sim.alias("sim"))
         .distinct()
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _top_k(scored, k, query_id_col, id_col, F.col("sim").desc())
 
 
 def pq_train_codebooks(
@@ -518,30 +596,14 @@ def pq_train_codebooks(
     metadata-sized (m·k·(d/m) doubles), the only training-time pass;
     everything downstream is pure expressions. Pass ``dims`` (the
     FAISS convention) to skip the fallback width-probe job."""
-    if dims is None:
-        dims = probe_dims(df, vec_col)
-    if dims == 0 or dims % m != 0:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sub = dims // m
-    # ONE collect job over the bounded sample, then every sub-book
-    # trains in-driver on its NumPy column slice (``_kmeans_local``):
-    # the previous m concurrent MLlib fits each ran ~20 Lloyd jobs
-    # over a persisted slice of this same capped sample — pure
-    # scheduler latency at any scale, since the sample is O(1) in the
-    # corpus by construction.
-    import numpy as np
-
-    vs = np.asarray(_collect_vecs(
+    sub = _subspaces(df, vec_col, dims, m)
+    # ONE collect job over the capped rows, then every sub-book trains
+    # in-driver on its NumPy column slice (``_sub_books``)
+    vs = _collect_vecs(
         df.select(_as_double(F.col(vec_col)).alias("v"))
         .limit(max_train_rows)
-    ), dtype=np.float64)
-    if vs.size == 0:
-        return [[] for _ in range(m)]
-    return [
-        _kmeans_local(vs[:, j * sub:(j + 1) * sub].tolist(),
-                      k=k_codes, seed=seed + j)
-        for j in range(m)
-    ]
+    )
+    return _sub_books(vs, m=m, sub=sub, k_codes=k_codes, seed=seed)
 
 
 def pq_topk(
@@ -575,11 +637,11 @@ def pq_topk(
     no per-pair float vector math at all. Exact top-k per query over
     the approximate scores via the standard rank window.
     """
+    _check_rerank(rerank, k)
+    sub = _subspaces(df, vec_col, dims, m)
     books = pq_train_codebooks(
-        df, vec_col, m=m, k_codes=k_codes, seed=seed, dims=dims
+        df, vec_col, m=m, k_codes=k_codes, seed=seed, dims=sub * m
     )
-    dims = sum(len(b[0]) for b in books)
-    sub = dims // m
 
     # The encode / score-table expression trees are built as SQL TEXT
     # and parsed in ONE ``F.expr`` call each (r12, guide §1.2 "driver
@@ -612,7 +674,7 @@ def pq_topk(
     # (r12): F.lit on the nested list measured ~1.4 s of py4j per call
     import math as _math
 
-    if books and all(
+    if all(books) and all(
             _math.isfinite(x) for bk in books for r in bk for x in r):
         bk_col = F.expr("array(" + ",".join(
             "array(" + ",".join(
@@ -620,7 +682,7 @@ def pq_topk(
                 for r in bk) + ")"
             for bk in books) + ")")
     else:
-        bk_col = F.lit(books)
+        bk_col = F.lit(books).cast("array<array<array<double>>>")
     coded = (
         df.select(F.col(id_col), F.expr(cast_vec).alias("__v"))
         .withColumn("__bk", bk_col)
@@ -648,35 +710,30 @@ def pq_topk(
         id_col,
         F.round(approx, round_digits).alias("approx_dot"),
     ).where(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_dot").desc(), F.col(id_col)
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w))
+    return _float_rank(scored, k, rerank, df, queries, id_col=id_col,
+                       vec_col=vec_col, query_id_col=query_id_col,
+                       round_digits=round_digits)
+
+
+def _float_rank(scored: DataFrame, k: int, rerank: int | None,
+                df: DataFrame, queries: DataFrame, *, id_col: str,
+                vec_col: str, query_id_col: str,
+                round_digits: int) -> DataFrame:
+    """Top-k of the float PQ tiers by ``approx_dot``, or — with
+    ``rerank`` — the ADC top-``rerank`` shortlist re-ranked on exact,
+    rounded dot products (``exact_dot``)."""
+    by = F.col("approx_dot").desc()
     if rerank is None:
-        return ranked.where(F.col("rank") <= k)
-    if rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    # exact pass over the shortlist only: |queries|·rerank rows — the
-    # raw-vector join touches a metadata-sized slice of the corpus
-    short = ranked.where(F.col("rank") <= rerank).select(query_id_col, id_col)
-    cvec = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("__cv"))
-    qvec = queries.select(
-        F.col(query_id_col), _as_double(F.col(vec_col)).alias("__qv")
-    )
-    exact = (
-        short.join(cvec, id_col)
-        .join(F.broadcast(qvec), query_id_col)
-        .select(
-            query_id_col, id_col,
-            F.round(dot(F.col("__qv"), F.col("__cv")), round_digits)
-            .alias("exact_dot"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("exact_dot").desc(), F.col(id_col)
-    )
-    return exact.withColumn("rank", F.row_number().over(w2)).where(
-        F.col("rank") <= k
+        return _top_k(scored, k, query_id_col, id_col, by)
+    return _rerank(
+        _top_k(scored, rerank, query_id_col, id_col, by), k,
+        df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("__cv")),
+        queries.select(F.col(query_id_col),
+                       _as_double(F.col(vec_col)).alias("__qv")),
+        F.round(dot(F.col("__qv"), F.col("__cv")), round_digits)
+        .alias("exact_dot"),
+        F.col("exact_dot").desc(),
+        query_id_col=query_id_col, id_col=id_col,
     )
 
 
@@ -726,46 +783,21 @@ def ivfpq_topk(
     raw embeddings); rerank joins raw vectors for |queries|·rerank
     rows only. The oracle-able fixed-point twin is
     :func:`ann_portable.ivfpq_topk_fixed`."""
-    if n_probe < 1 or n_probe > n_cells:
-        raise ValueError(f"need 1 <= n_probe <= n_cells, got "
-                         f"{n_probe}/{n_cells}")
+    _check_probe(n_probe, n_cells)
+    _check_rerank(rerank, k)
     cand = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    if dims is None:
-        dims = probe_dims(df, vec_col)
-    if dims == 0 or dims % m != 0:
-        raise ValueError(f"dims {dims} not divisible by m={m}")
-    sub = dims // m
-
-    # coarse quantizer: ONE collect of the bounded sample + in-driver
-    # seeded k-means++/Lloyd (see ``_kmeans_local`` — the MLlib fit it
-    # replaces ran ~25 scheduler-bound jobs over KiB of sample)
-    vs = _collect_vecs(
-        cand.sample(fraction=min(1.0, train_fraction), seed=seed)
-        .limit(max_train_rows).select("v")
-    )
-    if len(vs) < n_cells * 10:
-        vs = _collect_vecs(cand.limit(max_train_rows).select("v"))
-    cmatrix = _lit_matrix(_kmeans_local(
-        vs, k=n_cells, seed=seed, normalize=True))
-
-    def nearest_cells(vcol: Column, n: int) -> Column:
-        scored = F.transform(
-            cmatrix,
-            lambda c, i: F.struct(
-                (-dot(vcol, c)).alias("negd"), i.alias("cell")),
-        )
-        return F.transform(
-            F.slice(F.array_sort(scored), 1, n),
-            lambda s: s.getField("cell"),
-        )
+    sub = _subspaces(df, vec_col, dims, m)
+    train = dict(seed=seed, train_fraction=train_fraction,
+                 max_train_rows=max_train_rows)
+    cmatrix = _lit_matrix(_train_coarse(cand, n_cells, **train))
 
     # residuals against the assigned cell — a narrow expression map
     # reused by the sub-book training sample and the encode pass (no
-    # persist: training is now ONE bounded-sample collect, so nothing
-    # scans asg repeatedly; the encode pass recomputes the cheap
-    # expressions in its own single scan)
+    # persist: training is ONE bounded-sample collect, so nothing scans
+    # asg repeatedly; the encode pass recomputes the cheap expressions
+    # in its own single scan)
     asg = (
-        cand.withColumn("cell", nearest_cells(F.col("v"), 1)[0])
+        cand.withColumn("cell", _nearest_cells(cmatrix, F.col("v"), 1)[0])
         .withColumn(
             "r",
             F.zip_with(
@@ -773,27 +805,9 @@ def ivfpq_topk(
                 lambda a, b: a - b),
         )
     )
-    # the same seeded-sample recipe as the coarse training: a bare
-    # unordered limit()'s row set depends on task completion order
-    # (r8 ADVICE); ONE collect of the bounded residual sample, then
-    # all m sub-books fit in-driver on NumPy column slices
-    # (``_kmeans_local`` — replaces m concurrent MLlib fit chains)
-    import numpy as np
-
-    rvs = np.asarray(_collect_vecs(
-        asg.sample(fraction=min(1.0, train_fraction), seed=seed)
-        .limit(max_train_rows).select("r")
-    ), dtype=np.float64)
-    if len(rvs) < k_codes * 4:
-        # tiny-input fallback, as in the coarse training above
-        rvs = np.asarray(_collect_vecs(
-            asg.limit(max_train_rows).select("r")), dtype=np.float64)
-    books = [
-        _lit_matrix(_kmeans_local(
-            rvs[:, j * sub:(j + 1) * sub].tolist(),
-            k=k_codes, seed=seed + j))
-        for j in range(m)
-    ] if rvs.size else [_lit_matrix([]) for _ in range(m)]
+    books = [_lit_matrix(b) for b in _sub_books(
+        _sample_vecs(asg, "r", k_codes * 4, **train),
+        m=m, sub=sub, k_codes=k_codes, seed=seed)]
 
     def encode(rcol: Column) -> Column:
         codes = []
@@ -821,7 +835,7 @@ def ivfpq_topk(
             _as_double(F.col(vec_col)).alias("qv"),
         )
         .withColumn(
-            "cell", F.explode(nearest_cells(F.col("qv"), n_probe)))
+            "cell", F.explode(_nearest_cells(cmatrix, F.col("qv"), n_probe)))
         .withColumn(
             "base",
             dot(F.col("qv"), F.element_at(cmatrix, F.col("cell") + 1)))
@@ -858,32 +872,9 @@ def ivfpq_topk(
             F.round(approx, round_digits).alias("approx_dot"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_dot").desc(), F.col(id_col))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if rerank is None:
-        return ranked.where(F.col("rank") <= k)
-    if rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    short = ranked.where(F.col("rank") <= rerank).select(
-        query_id_col, id_col)
-    cvec = df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("__cv"))
-    qvec = queries.select(
-        F.col(query_id_col), _as_double(F.col(vec_col)).alias("__qv"))
-    exact = (
-        short.join(cvec, id_col)
-        .join(F.broadcast(qvec), query_id_col)
-        .select(
-            query_id_col, id_col,
-            F.round(dot(F.col("__qv"), F.col("__cv")), round_digits)
-            .alias("exact_dot"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("exact_dot").desc(), F.col(id_col))
-    return exact.withColumn("rank", F.row_number().over(w2)).where(
-        F.col("rank") <= k)
+    return _float_rank(scored, k, rerank, df, queries, id_col=id_col,
+                       vec_col=vec_col, query_id_col=query_id_col,
+                       round_digits=round_digits)
 
 
 def ann_recall_report(
@@ -901,8 +892,9 @@ def ann_recall_report(
 ) -> DataFrame:
     """Bounds-contract companion to the float ANN trio (the
     ``group_approx_bounds_report`` recipe, r9 VERDICT next-#6): the
-    three MLlib-k-means tiers produce engine-specific rankings — no
-    DuckDB oracle can replay them value-for-value — so this report
+    three float-k-means tiers (``_kmeans_local`` over a sample) produce
+    engine-specific rankings — no DuckDB oracle can replay them
+    value-for-value, since the float scores are not — so this report
     computes each tier AND its exact brute-force baseline in ONE plan
     and emits only what an oracle CAN pin: one row per tier,
     ``(tier, n_queries, k, recall_ok)``, where ``recall_ok`` asserts
@@ -936,17 +928,13 @@ def ann_recall_report(
     qs = queries.select(
         F.col(query_id_col).alias("qid"),
         _as_double(F.col(vec_col)).alias("qv"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("s").desc(), F.col(id_col))
-    brute_dot = (
+    brute_dot = _top_k(
         cand.crossJoin(F.broadcast(qs))
         .where(F.col("qid") != F.col(id_col))
         .select(F.col("qid").alias(query_id_col), F.col(id_col),
-                F.round(dot(F.col("qv"), F.col("v")), 6).alias("s"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col)
-    )
+                F.round(dot(F.col("qv"), F.col("v")), 6).alias("s")),
+        k, query_id_col, id_col, F.col("s").desc(),
+    ).select(query_id_col, id_col)
 
     nq = queries.select(
         F.countDistinct(query_id_col).cast("long").alias("n_queries"))
@@ -969,10 +957,10 @@ def ann_recall_report(
             ).alias("recall_ok"),
         )
 
-    # the three tiers train independently (18 seeded MLlib fits total
-    # — at gate scale the wall cost is fit-scheduling latency, not
-    # data), so construct them concurrently like the sub-book fits;
-    # each tier's plan/centroids are unchanged, only the wall clock
+    # the three tiers train independently (each build runs its own
+    # bounded-sample collects — at gate scale the wall cost is job
+    # latency, not data), so construct them concurrently; each tier's
+    # plan/centroids are unchanged, only the wall clock
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as ex:

@@ -1036,7 +1036,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan to ~n_probe/n_cells per query, residual-trained PQ codes
     ADC-score what remains (cell-independent per-query score tables +
     a per-probe scalar base), exact re-rank of the 100-candidate
-    shortlist. MLlib float k-means quantizers ⇒ rows-only like its
+    shortlist. Float k-means quantizers ⇒ rows-only like its
     ``ann_ivf_topk``/``ann_pq_topk`` ingredients (recall + rerank
     floors asserted in tests/test_similarity.py); the bit-exact
     oracled twins are ``ann_ivfpq_topk_portable`` and the persisted
@@ -1069,7 +1069,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_float_recall_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ORACLED companion to the rows-only float ANN trio (r9
     VERDICT next-#6, the ``group_approx_stats`` bounds-report recipe): the
-    MLlib-k-means tiers can't be value-replayed by DuckDB, so this
+    float-k-means tiers can't be value-replayed by DuckDB, so this
     gate computes each tier AND its exact brute-force baseline in one
     plan (``similarity.ann_recall_report``) and emits per-tier
     booleans asserting mean recall ≥ floor — which the oracle pins
@@ -1103,7 +1103,7 @@ def ann_ivf_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (Lloyd CTE chains, argmin assignment, top-3-of-8 probes,
     in-cell top-5) and the neighbor lists hash-match bit-exactly.
     Converts the rows-only ``ann_ivf_topk`` check into a provable op;
-    the float MLlib path stays the 100 TB default (same split as
+    the float path stays the 100 TB default (same split as
     minhash_near_dupes vs _portable, SURVEY §8)."""
     from pandas_rust_algos_spark.operators.ann_portable import (
         ivf_topk_fixed,
@@ -1161,7 +1161,7 @@ def ann_ivfpq_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual sub-codebook Lloyd chains, encoding, probing, and the ADC
     sum end to end and the neighbor lists hash-match bit-exactly.
     Composes the two already-oracled ingredients (ann_ivf/ann_pq); the
-    float MLlib composition is ``similarity.ivfpq_topk`` (recall-gated
+    float composition is ``similarity.ivfpq_topk`` (recall-gated
     in tests/test_similarity.py)."""
     from pandas_rust_algos_spark.operators.ann_portable import (
         ivfpq_topk_fixed,

@@ -17,6 +17,7 @@ import sys
 
 import pytest
 
+from pandas_rust_algos_spark import cachelife
 from pandas_rust_algos_spark.plans import registry
 
 
@@ -121,7 +122,8 @@ def test_every_query_documented_in_survey():
     """SURVEY.md §8 is the judge's coverage map — every registered gate
     query must appear there, so the map can never drift behind the
     registry."""
-    with open("/root/repo/SURVEY.md") as f:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "SURVEY.md")) as f:
         survey = f.read()
     missing = [n for n in registry.all_queries() if f"`{n}`" not in survey
                and n not in survey]
@@ -208,6 +210,45 @@ def test_sketch_merges_two_phase_jvm_side_job_count(spark, sf_dir, name):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "InPandas"):
         assert marker not in plan, f"{name}: Python in the plan ({marker})"
     assert len(jobs) <= _SKETCH_MERGE_JOBS[name], (name, jobs)
+
+
+# Spark jobs per call of each ANN gate, as upper bounds. Training and
+# index builds run inside the query fn, so the count covers the fn call
+# and the collect. ``ann_float_recall_bounds`` builds its three tiers on
+# pool threads, whose jobs carry no group; its count is the main
+# thread's share (it varies by one with thread timing).
+_ANN_JOBS = {
+    "cosine_topk": 6,
+    "hard_negatives": 6,
+    "ann_lsh_topk": 7,
+    "ann_pq_topk": 10,
+    "ann_ivf_topk": 11,
+    "ann_ivf_topk_portable": 13,
+    "ann_pq_topk_portable": 13,
+    "ann_ivfpq_topk": 15,
+    "ann_ivfpq_topk_portable": 20,
+    "ann_index_topk": 18,
+    "ann_ivfpq_rerank_topk": 23,
+    "ann_float_recall_bounds": 27,
+    "ann_index_append_topk": 21,
+    "ann_index_stream_append": 21,
+    "ann_ivfpq_index_read": 28,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ANN_JOBS))
+def test_ann_gate_job_count(spark, sf_dir, name):
+    """No ANN gate spends more Spark jobs per call than its pin."""
+    sc = spark.sparkContext
+    group = f"ann-jobs-{name}"
+    sc.setJobGroup(group, "ANN job-count pin")
+    try:
+        registry.get(name).fn(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        cachelife.release()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= _ANN_JOBS[name], (name, len(jobs))
 
 
 # Registry queries whose generated classes together overflow Spark's

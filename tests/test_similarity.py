@@ -646,3 +646,56 @@ def test_lloyd_two_level_merge_bounds_driver_collect(spark, emb, monkeypatch):
                                  specs=specs)
     got_m = ap._train_centroids(hi, "vec_id", k=4, iters=2, specs=specs)
     assert got_m == want_m
+
+
+# ------------------------------------------------ shared argument checks
+
+
+def _ivf_entry_points():
+    from pandas_rust_algos_spark.operators import ann_portable as ap
+
+    return {
+        "ivf_topk": sim.ivf_topk,
+        "ivfpq_topk": lambda *a, **kw: sim.ivfpq_topk(*a, dims=64, **kw),
+        "ivf_topk_fixed": ap.ivf_topk_fixed,
+        "ivfpq_topk_fixed":
+            lambda *a, **kw: ap.ivfpq_topk_fixed(*a, dims=64, **kw),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_ivf_entry_points()))
+@pytest.mark.parametrize("n_probe", [0, 5])
+def test_ivf_entry_points_reject_bad_probe_count(spark, emb, queries, name,
+                                                 n_probe):
+    """Every IVF entry point needs 1 <= n_probe <= n_cells and says so
+    before any training job: a zero probe count must raise, not return
+    an empty result."""
+    with pytest.raises(ValueError, match="n_probe"):
+        _ivf_entry_points()[name](emb, queries, k=K, n_cells=4,
+                                  n_probe=n_probe)
+
+
+def test_ann_entry_points_return_no_rows_on_empty_corpus(spark):
+    """An empty corpus searches to an empty result on every in-memory
+    tier, float and fixed-point alike: empty centroid matrices and
+    codebooks must still resolve to typed plan literals."""
+    from pandas_rust_algos_spark.operators import ann_portable as ap
+
+    schema = "vec_id long, embedding array<float>"
+    empty = spark.createDataFrame([], schema)
+    qs = spark.createDataFrame(
+        [(0, [float(j % 3) for j in range(8)])], schema,
+    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    calls = {
+        "ivf_topk": lambda: sim.ivf_topk(empty, qs, n_cells=2, n_probe=1),
+        "pq_topk": lambda: sim.pq_topk(empty, qs, m=2, dims=8, rerank=5),
+        "ivfpq_topk": lambda: sim.ivfpq_topk(
+            empty, qs, n_cells=2, n_probe=1, m=2, dims=8, rerank=5),
+        "ivf_topk_fixed": lambda: ap.ivf_topk_fixed(
+            empty, qs, n_cells=2, n_probe=1),
+        "pq_topk_fixed": lambda: ap.pq_topk_fixed(empty, qs, m=2, dims=8),
+        "ivfpq_topk_fixed": lambda: ap.ivfpq_topk_fixed(
+            empty, qs, n_cells=2, n_probe=1, m=2, dims=8, rerank_k=5),
+    }
+    for name, call in calls.items():
+        assert call().collect() == [], name

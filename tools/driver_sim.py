@@ -6,6 +6,7 @@ mirroring the per-round CORRECTNESS gate. Usage:
 import hashlib
 import importlib.util
 import json
+import os
 import sys
 import time
 
@@ -16,7 +17,9 @@ SF = "/root/testdata/sf0.01"
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 
-spec = importlib.util.spec_from_file_location("e", "/root/repo/__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("e", os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "__spark_entry__.py"))
 m = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(m)
 
