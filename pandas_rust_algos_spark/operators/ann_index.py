@@ -331,9 +331,9 @@ def build_ivfpq_index_fixed(
     storage layout, cell routing, and ADC math are all value-provable.
 
     Build cost: the ``ivfpq_topk_fixed`` training passes (coarse
-    driver-coordinated Lloyd, residuals persisted lazily and released
-    after the codes write, m residual sub-book trainings) plus one
-    ``partitionBy(cell)`` write of the m-int code rows — the single
+    driver-coordinated Lloyd, residuals persisted, materialized once and
+    released after the codes write, m residual sub-book trainings) plus
+    one ``partitionBy(cell)`` write of the m-int code rows — the single
     intended shuffle; it IS the index."""
     sub = _subspaces(df, vec_col, dims, m)
     coarse, asg, books = _train_ivfpq(

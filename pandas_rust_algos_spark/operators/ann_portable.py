@@ -405,10 +405,11 @@ def _train_ivfpq(pts: DataFrame, id_col: str, *, n_cells: int, m: int,
     ``(coarse, asg, books)``.
 
     ``asg`` feeds the m sub-book trainings AND the caller's encode pass,
-    so it is persisted LAZILY: the first consumer (the lockstep seed
-    job) materializes the cache for the rest, with no dedicated
-    materialization pass (at 100 TB this frame is persisted/written
-    once either way). The caller owns its release once this returns."""
+    so it is persisted and materialized by one ``count()`` before
+    training. Left lazy, its first consumer — the lockstep seed job, a
+    union of m branches — would re-submit any shuffle stage under
+    ``pts`` (such as a round-robin repartition) once per branch. The
+    caller owns its release once this returns."""
     coarse = _train_centroids(pts, id_col, k=n_cells, iters=iters)[0]
     cmatrix = _lit_lmatrix(coarse)
     asg = (
@@ -417,6 +418,7 @@ def _train_ivfpq(pts: DataFrame, id_col: str, *, n_cells: int, m: int,
         .persist()
     )
     try:
+        asg.count()
         books = _train_centroids(
             asg.select(id_col, F.col("r").alias("v")), id_col,
             k=k_codes, iters=iters,
@@ -609,7 +611,7 @@ def ivfpq_topk_fixed(
 
     Scale shape: training is :func:`_train_ivfpq` (driver-coordinated
     Lloyd, k×dim partial-sum traffic/iter; the residual frame is
-    computed once as a zero-exchange map and lazily persisted); both
+    computed once as a zero-exchange map and persisted); both
     centroid sets are METADATA riding the search plan as literals;
     search is one broadcast join of the exploded query probes onto the
     coded corpus cells. The float composition is

@@ -382,15 +382,16 @@ def minhash_store_near_dupes(
     of ``new_docs`` — callers that overlapped its materialization with
     the bootstrap pass it through so the batch is not re-shingled
     here. Contract: it must equal ``batch_band_table(path, new_docs)``
-    (pure function of text + frozen params)."""
+    (pure function of text + frozen params). The returned plan reads
+    the band table twice, so a ``new_bands`` that is not cached yet is
+    persisted here and tracked with :mod:`cachelife`, as the locally
+    built one is; an already-cached one is used as it is, and its
+    owner releases it."""
     meta = _read_meta(path)
     id_col, nh = meta["id_col"], meta["num_hashes"]
-    # ``new_bands`` arrives already persisted AND tracked by the caller
-    # (the overlap recipe materialized it into the cache while the
-    # bootstrap ran) — re-persisting it here was a no-op warning, so
-    # only the locally built band table persists + tracks here.
-    b_new = (cachelife.track(batch_band_table(path, new_docs).persist())
-             if new_bands is None else new_bands)
+    b_new = batch_band_table(path, new_docs) if new_bands is None else new_bands
+    if not b_new.is_cached:
+        b_new = cachelife.track(b_new.persist())
     stored = read_store_sigs(spark, path)
     b_stored = _band_table(
         stored, id_col, nh, meta["bands"], meta["hash_mode"])

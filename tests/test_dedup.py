@@ -436,7 +436,9 @@ def test_minhash_store_incremental(spark, tmp_path):
     new-touching pairs (signatures are a pure function of text +
     frozen params); (2) append ingests under the STORED params and
     refuses id re-ingest; (3) a second batch sees dupes against both
-    the original store and the first appended batch."""
+    the original store and the first appended batch; (4) a precomputed
+    ``new_bands`` gives the same pairs and, when it arrives unpersisted,
+    leaves no cache after ``cachelife.release()``."""
     from pandas_rust_algos_spark.operators.minhash_store import (
         append_minhash_store,
         minhash_store_near_dupes,
@@ -492,7 +494,10 @@ def test_minhash_store_incremental(spark, tmp_path):
     # precomputed probe-side band table (the overlapped-bootstrap
     # path): passing batch_band_table() through new_bands= must be
     # result-identical to the default in-function derivation — the
-    # band table is a pure function of (text, frozen params)
+    # band table is a pure function of (text, frozen params). An
+    # unpersisted one is persisted and tracked by the call, so
+    # cachelife.release() drops it from the cache.
+    from pandas_rust_algos_spark import cachelife
     from pandas_rust_algos_spark.operators.minhash_store import (
         batch_band_table,
     )
@@ -501,6 +506,10 @@ def test_minhash_store_incremental(spark, tmp_path):
     inc2_pre = {(r["id_a"], r["id_b"]) for r in minhash_store_near_dupes(
         spark, path, batch2, threshold=0.5, new_bands=pre).collect()}
     assert inc2_pre == inc2
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert pre.is_cached and cache.lookupCachedData(pre._jdf).isDefined()
+    cachelife.release()
+    assert not pre.is_cached and cache.lookupCachedData(pre._jdf).isEmpty()
 
 
 def test_minhash_store_stream_ingest(spark, tmp_path):

@@ -6,11 +6,14 @@ designed around, pinned so a refactor can't silently regress them:
 - aggregations are two-phase (map-side partial before the exchange);
 - JVM-only queries contain no Python evaluation nodes;
 - window transforms share one Sort+Exchange across expressions;
-- a session compiles each plan shape once (generated-code cache).
+- a session compiles each plan shape once (generated-code cache);
+- a warm plan build stays a few hundred JVM round trips (no call-site
+  capture).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -226,13 +229,13 @@ _ANN_JOBS = {
     "ann_ivf_topk_portable": 13,
     "ann_pq_topk_portable": 13,
     "ann_ivfpq_topk": 15,
-    "ann_ivfpq_topk_portable": 20,
+    "ann_ivfpq_topk_portable": 19,
     "ann_index_topk": 18,
-    "ann_ivfpq_rerank_topk": 23,
+    "ann_ivfpq_rerank_topk": 22,
     "ann_float_recall_bounds": 27,
     "ann_index_append_topk": 21,
     "ann_index_stream_append": 21,
-    "ann_ivfpq_index_read": 28,
+    "ann_ivfpq_index_read": 27,
 }
 
 
@@ -260,42 +263,77 @@ _CODEGEN_CYCLE = (
     "group_quantile_midpoint", "group_rank", "asof_join", "events_stream_cms",
 )
 
-_CODEGEN_PROBE = """
-import sys
+_SESSION_PROBE = """
+import json, sys, threading
+from py4j.clientserver import ClientServerConnection
+from pyspark.errors.utils import is_debugging_enabled
 from pandas_rust_algos_spark import cachelife
 from pandas_rust_algos_spark.plans import registry
 from pandas_rust_algos_spark.session import get_spark
 
 sf_dir, names = sys.argv[1], sys.argv[2].split(",")
-spark = get_spark("codegen-cache-pin")
+send, trips = ClientServerConnection.send_command, 0
+
+def counted(self, command):
+    # the building thread's own trips; py4j's finalizer thread sends its
+    # object deletes whenever Python's GC frees proxies
+    global trips
+    if threading.current_thread() is threading.main_thread():
+        trips += 1
+    return send(self, command)
+
+ClientServerConnection.send_command = counted
+spark = get_spark("session-pin")
 spark.sparkContext.setLogLevel("ERROR")
 metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-counts = []
+compiles, build_trips = [], {}
 for _ in range(2):
     before = metrics.METRIC_COMPILATION_TIME().getCount()
     for name in names:
-        registry.get(name).fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        start = trips
+        df = registry.get(name).fn(spark, sf_dir)
+        build_trips[name] = trips - start
+        df.write.format("noop").mode("overwrite").save()
         cachelife.release()
-    counts.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+    compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+print(json.dumps({"compiles": compiles, "build_trips": build_trips,
+                  "call_site_capture": is_debugging_enabled()}))
 spark.stop()
-print(*counts)
 """
 
 
-def test_codegen_cache_holds_a_registry_cycle(sf_dir):
-    """A second cycle over the same queries compiles no class: the
-    session's generated-code cache holds every class of the first cycle,
-    though the cycle needs more than Spark's default 100 entries.
+@pytest.fixture(scope="module")
+def session_probe(sf_dir):
+    """Two cycles over :data:`_CODEGEN_CYCLE` in a fresh process: the
+    classes each cycle compiles, the py4j round trips of each query's
+    warm (second-cycle) fn call, and whether call-site capture is on.
 
-    Runs in a fresh process, so classes cached by earlier tests can
-    neither evict these entries nor hide misses."""
+    A fresh process, so classes cached by earlier tests can neither
+    evict these entries nor hide misses, and PySpark's process-wide
+    call-site flag is read from this session."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, SPARK_DRIVER_MEM="2g", PYTHONPATH=os.pathsep.join(
         p for p in (root, os.environ.get("PYTHONPATH")) if p))
     out = subprocess.run(
-        [sys.executable, "-c", _CODEGEN_PROBE, sf_dir, ",".join(_CODEGEN_CYCLE)],
+        [sys.executable, "-c", _SESSION_PROBE, sf_dir, ",".join(_CODEGEN_CYCLE)],
         cwd=root, env=env, capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
-    first, second = map(int, out.stdout.split()[-2:])
+    return json.loads(out.stdout.splitlines()[-1])
+
+
+def test_codegen_cache_holds_a_registry_cycle(session_probe):
+    """A second cycle over the same queries compiles no class: the
+    session's generated-code cache holds every class of the first cycle,
+    though the cycle needs more than Spark's default 100 entries."""
+    first, second = session_probe["compiles"]
     assert first > 100, f"cycle compiles only {first} classes; it no longer overflows the default"
     assert second == 0, f"second cycle recompiled {second} of {first} classes"
+
+
+def test_warm_build_round_trips(session_probe):
+    """Engine sessions turn PySpark's per-call call-site capture off, so
+    a warm ``group_quantile_linear`` build stays a few hundred py4j
+    round trips (482 measured; over 1,400 with capture on)."""
+    assert session_probe["call_site_capture"] is False
+    trips = session_probe["build_trips"]["group_quantile_linear"]
+    assert trips <= 600, f"warm group_quantile_linear build took {trips} round trips"
