@@ -200,7 +200,6 @@ def stream_append_ivf_index(
     stream_vecs: DataFrame,
     *,
     checkpoint: str,
-    available_now: bool = True,
 ):
     """Streaming ingest for the persisted IVF index — the
     ``minhash_store.stream_ingest_minhash_store`` recipe applied to
@@ -229,34 +228,23 @@ def stream_append_ivf_index(
     Per micro-batch cost: one narrow assignment pass over the batch
     (centroid matrix rides as a plan literal) plus the partitioned
     write — the existing corpus never shuffles, the store is never
-    read. Returns the StreamingQuery (caller owns awaitTermination).
+    read. Returns the query, drained.
     """
+    from pandas_rust_algos_spark.streaming.sinks import (
+        drain, overwrite_partitions,
+    )
+
     meta, centers = _read_index(path)
     ingest_path = os.path.join(path, "cells_stream")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         assigned = _assign(batch_df, meta["id_col"], meta["vec_col"],
                            centers)
-        # per-writer option, NOT a session-global conf toggle: this
-        # module coexists with ThreadPoolExecutor-concurrent Spark jobs
-        # (similarity.py), and a set/restore on the shared session could
-        # flip a concurrent static-mode overwrite to dynamic mid-write
-        # (ADVICE r11)
-        (
-            assigned.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "cell")
-            .parquet(ingest_path)
-        )
+        overwrite_partitions(
+            assigned.withColumn("batch_id", F.lit(batch_id)),
+            ingest_path, ["batch_id", "cell"])
 
-    writer = (
-        stream_vecs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_vecs.writeStream.foreachBatch(sink), checkpoint)
 
 
 def ivf_index_query(

@@ -25,11 +25,9 @@ Scale shape: each iteration is the canonical 2-shuffle pagerank step
 (edges⋈ranks on src, then Σ by dst). Edges are hash-partitioned on
 ``src`` ONCE up front so every iteration's join reuses that exchange
 (Spark reuses the sorted/partitioned side; only the rank table — one
-row per NODE, far smaller than edges — moves per iteration).
-``checkpoint_every`` truncates the growing lineage with
-``localCheckpoint`` exactly like ``dup_clusters`` does; iteration
-count is fixed (power iteration, not convergence-tested), so the
-driver never inspects data — there is no ``collect()`` anywhere.
+row per NODE, far smaller than edges — moves per iteration). The
+iteration count is fixed (power iteration, not convergence-tested), so
+the driver never inspects data — there is no ``collect()`` anywhere.
 
 Dangling nodes (no out-edges) contribute nothing — their mass leaks,
 i.e. the common "non-normalized" convention; document scores are
@@ -128,7 +126,6 @@ def pagerank_fixed(
     damping_pct: int = 85,
     n_iter: int = 5,
     scale: int = 1_000_000,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """PageRank over directed ``edges``; returns ``(node, rank)`` with
     ``rank`` in integer ``scale``-units (1.0 ≡ ``scale``).
@@ -193,7 +190,7 @@ def pagerank_fixed(
     )
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
-    for i in range(n_iter):
+    for _ in range(n_iter):
         contribs = (
             ed.join(ranks, ed.src == ranks.node)
             .select("dst", F.expr("rank div deg").alias("c"))
@@ -208,8 +205,6 @@ def pagerank_fixed(
                 .cast("long").alias("rank"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 

@@ -193,7 +193,6 @@ def stream_ingest_minhash_store(
     stream_docs: DataFrame,
     *,
     checkpoint: str,
-    available_now: bool = True,
     guard_existing: bool = False,
 ):
     """Streaming ingest for the signature store — the Bloom store's
@@ -230,8 +229,11 @@ def stream_ingest_minhash_store(
     scan per batch, the probe-side cost this path otherwise avoids.
 
     Per micro-batch cost: one shingle pass over the batch only (plus
-    the id scan iff ``guard_existing``); returns the StreamingQuery
-    (caller owns awaitTermination)."""
+    the id scan iff ``guard_existing``); returns the query, drained."""
+    from pandas_rust_algos_spark.streaming.sinks import (
+        drain, overwrite_partitions,
+    )
+
     meta = _read_meta(path)
     ingest_path = os.path.join(path, "sigs_stream.parquet")
 
@@ -245,25 +247,10 @@ def stream_ingest_minhash_store(
         sigs = minhash_signatures(
             batch_df, meta["id_col"], meta["text_col"], k=meta["k"],
             num_hashes=meta["num_hashes"], hash_mode=meta["hash_mode"])
-        # per-writer option, NOT a session-global conf toggle — a
-        # set/restore on the shared session could flip a CONCURRENT
-        # static-mode overwrite to dynamic mid-write (the ann_index
-        # stream sink's ADVICE-r11 fix, applied to this sibling sink)
-        (
-            sigs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(ingest_path)
-        )
+        overwrite_partitions(sigs.withColumn("batch_id", F.lit(batch_id)),
+                             ingest_path, ["batch_id"])
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_docs.writeStream.foreachBatch(sink), checkpoint)
 
 
 def minhash_store_pairs(

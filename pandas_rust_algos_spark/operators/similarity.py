@@ -961,21 +961,17 @@ def ann_recall_report(
     # bounded-sample collects — at gate scale the wall cost is job
     # latency, not data), so construct them concurrently; each tier's
     # plan/centroids are unchanged, only the wall clock
-    from concurrent.futures import ThreadPoolExecutor
+    from pandas_rust_algos_spark.session import run_concurrently
 
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        f_ivf = ex.submit(
-            ivf_topk, df, queries, id_col=id_col, vec_col=vec_col,
-            query_id_col=query_id_col, k=k)
-        f_pq = ex.submit(
-            pq_topk, df, queries, id_col=id_col, vec_col=vec_col,
-            query_id_col=query_id_col, k=k, m=8, k_codes=16,
-            rerank=100, dims=dims)
-        f_ivfpq = ex.submit(
-            ivfpq_topk, df, queries, id_col=id_col, vec_col=vec_col,
-            query_id_col=query_id_col, k=k, n_cells=16,
-            n_probe=6, m=8, k_codes=16, rerank=100, dims=dims)
-        ivf, pq, ivfpq = f_ivf.result(), f_pq.result(), f_ivfpq.result()
+    cols = dict(id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
+                k=k)
+    ivf, pq, ivfpq = run_concurrently(
+        lambda: ivf_topk(df, queries, **cols),
+        lambda: pq_topk(df, queries, **cols, m=8, k_codes=16, rerank=100,
+                        dims=dims),
+        lambda: ivfpq_topk(df, queries, **cols, n_cells=16, n_probe=6,
+                           m=8, k_codes=16, rerank=100, dims=dims),
+    )
     return (
         tier_row("ivf", ivf, brute_cos, ivf_floor)
         .unionByName(tier_row("pq", pq, brute_dot, pq_floor))

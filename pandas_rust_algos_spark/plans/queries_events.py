@@ -111,7 +111,6 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = se.read_events_stream(spark, sf_dir)
     return se.run_available_now(
         se.tumbling_counts(stream), table="events_stream_tumbling_out",
-        state_partitions=8,
     )
 
 
@@ -219,7 +218,6 @@ def events_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = se.read_events_stream(spark, sf_dir)
     return se.run_available_now(
         se.session_counts(stream), table="events_stream_sessions_out",
-        state_partitions=8,
     )
 
 
@@ -443,7 +441,6 @@ def events_stream_hll_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = se.read_events_stream(spark, sf_dir)
     regs = se.run_available_now(
         se.hll_windowed(stream), table="events_stream_hll_out",
-        state_partitions=8,
     )
     return hll_estimate(regs, "window_start", m=64)
 
@@ -464,7 +461,6 @@ def events_stream_cms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = se.read_events_stream(spark, sf_dir)
     return se.run_available_now(
         se.cms_windowed(stream), table="events_stream_cms_out",
-        state_partitions=8,
     )
 
 
@@ -509,7 +505,7 @@ def events_stream_hist_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = se.read_events_stream(spark, sf_dir)
     cells = se.run_available_now(
         se.hist_windowed(stream, "value", **_HSTREAM_ARGS),
-        table="events_stream_hist_out", state_partitions=8,
+        table="events_stream_hist_out",
     )
     return hist_quantiles(
         cells, "window_start", _HSTREAM_QS, **_HSTREAM_ARGS)
@@ -1238,7 +1234,6 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = se.dedup_stream(doubled, ["event_id"])
     out = se.run_available_now(
         deduped, table="events_stream_dedup_out", output_mode="append",
-        state_partitions=8,
     )
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -1284,11 +1279,11 @@ def events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominated by per-shard state-store commits (32 shards × 4 stores ×
     2 batches, ~0.5s each; the availableNow drain always runs a second
     zero-input batch to advance the watermark and flush endstate).
-    Sizing state shards to the stream's volume (``state_partitions=8``
-    — see ``run_available_now``) cuts the drain to ~2s with identical
-    results; the residual is the two mandatory batch rounds + state
-    commit, i.e. steady-state Structured Streaming overhead, not plan
-    waste."""
+    Sizing state shards to the stream's volume (8, the
+    ``STATE_PARTITIONS`` of every ``run_available_now``) cuts the drain
+    to ~2s with identical results; the residual is the two mandatory
+    batch rounds + state commit, i.e. steady-state Structured Streaming
+    overhead, not plan waste."""
     tune(spark)
     from pandas_rust_algos_spark.streaming import events as se
     from pandas_rust_algos_spark.streaming.joins import click_to_purchase
@@ -1296,8 +1291,7 @@ def events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = se.read_events_stream(spark, sf_dir)
     joined = click_to_purchase(stream)
     out = se.run_available_now(
-        joined, table="events_stream_join_out", output_mode="append",
-        state_partitions=8)
+        joined, table="events_stream_join_out", output_mode="append")
     return out.select(
         "user_id", "click_id", "purchase_id", "amount",
         F.unix_micros("click_ts").alias("click_us"),
@@ -1503,7 +1497,6 @@ def events_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf.funnel_state(stream),
         table="events_stream_funnel_out",
         output_mode="update",
-        state_partitions=8,
     )
     return sf.funnel_counts(drained)
 
@@ -1596,7 +1589,6 @@ def events_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return se.run_available_now(
         sc.cusum_state(stream, target=50.0, slack=5.0, threshold=100.0),
         table="t_gate_stream_cusum", output_mode="append",
-        state_partitions=8,
     )
 
 
@@ -1776,10 +1768,8 @@ def events_stream_kmv_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store = tempfile.mkdtemp(prefix="events_kmv_store_") + "/store"
     ckpt = tempfile.mkdtemp(prefix="events_kmv_ckpt_")
-    q = se.kmv_windowed_store(stream, store, checkpoint=ckpt,
-                              key="user_id", k=64,
-                              hash_mode="portable")
-    q.awaitTermination()
+    se.kmv_windowed_store(stream, store, checkpoint=ckpt,
+                          key="user_id", k=64, hash_mode="portable")
     sk = spark.read.parquet(store)
     est = kmv_estimate(sk, "window_start", k=64)
     prev = sk.select(
@@ -1842,7 +1832,7 @@ def events_stream_corr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 64).cast("double").alias("y"))
     cells = se.run_available_now(
         se.hist2d_windowed(stream, "x", "y", **_CSTREAM_ARGS),
-        table="events_stream_corr_out", state_partitions=8,
+        table="events_stream_corr_out",
     )
     out = hist2d_weighted_corr_cov(
         cells, "window_start", **_CSTREAM_ARGS)

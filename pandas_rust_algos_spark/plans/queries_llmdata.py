@@ -21,7 +21,7 @@ from pandas_rust_algos_spark.operators import multimodal as mm
 from pandas_rust_algos_spark.operators import similarity as sim
 from pandas_rust_algos_spark.operators import text as tx
 from pandas_rust_algos_spark.plans.registry import register
-from pandas_rust_algos_spark.session import tune
+from pandas_rust_algos_spark.session import run_concurrently, tune
 from pandas_rust_algos_spark.sources import load_table, spread
 
 
@@ -331,7 +331,6 @@ def minhash_store_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the (band, bucket) join against the STORED signatures waits
     on both."""
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from pandas_rust_algos_spark.operators.minhash_store import (
         batch_band_table,
@@ -362,11 +361,7 @@ def minhash_store_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         b.count()  # materialize into the cache while bootstrap runs
         return b
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        boot_f = pool.submit(bootstrap)
-        bands_f = pool.submit(probe_bands)
-        boot_f.result()
-        b_new = bands_f.result()
+    _, b_new = run_concurrently(bootstrap, probe_bands)
     return minhash_store_near_dupes(
         spark, idx, batch, threshold=0.5, new_bands=b_new)
 
@@ -400,7 +395,6 @@ def minhash_store_stream_ingest(spark: SparkSession,
     they run overlapped from a 2-thread pool (guide §2.6) and only the
     post-drain audit waits on both."""
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from pandas_rust_algos_spark.operators.minhash_store import (
         freeze_minhash_params,
@@ -433,12 +427,9 @@ def minhash_store_stream_ingest(spark: SparkSession,
     def drain() -> None:
         spark.sparkContext.setJobDescription(
             "minhash_store_stream_ingest: stream drain")
-        q = stream_ingest_minhash_store(idx, stream, checkpoint=ckpt)
-        q.awaitTermination()
+        stream_ingest_minhash_store(idx, stream, checkpoint=ckpt)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(bootstrap), pool.submit(drain)]:
-            f.result()
+    run_concurrently(bootstrap, drain)
     return minhash_store_pairs(
         spark, idx, docs.where(F.col("doc_id") % 5 == 0),
         threshold=0.5)
@@ -1965,10 +1956,9 @@ def ann_index_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     odd.coalesce(2).write.mode("overwrite").parquet(landing)
     stream = (spark.readStream.schema(odd.schema)
               .option("maxFilesPerTrigger", 1).parquet(landing))
-    q = stream_append_ivf_index(
+    stream_append_ivf_index(
         idx, stream,
         checkpoint=tempfile.mkdtemp(prefix="ivf_stream_ckpt_"))
-    q.awaitTermination()
     queries = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )

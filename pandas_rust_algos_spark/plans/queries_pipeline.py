@@ -23,7 +23,7 @@ from pandas_rust_algos_spark.operators import text as tx
 from pandas_rust_algos_spark.operators import validate as V
 from pandas_rust_algos_spark.operators.datasplit import split_threshold_hex
 from pandas_rust_algos_spark.plans.registry import dsum, register
-from pandas_rust_algos_spark.session import tune
+from pandas_rust_algos_spark.session import run_concurrently, tune
 from pandas_rust_algos_spark.sources import load_table, spread
 
 
@@ -1249,17 +1249,12 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrently so the small orders write back-fills the executors
     # the lineitem write's task tail frees (guide §2.6, the
     # formats_roundtrip recipe)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _bland(args) -> None:
-        bdf, tbl, key = args
-        write_bucketed(bdf, tbl, key, num_buckets=8)
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        list(ex.map(_bland, (
-            (li, "gate_bkt_lineitem", "l_orderkey"),
-            (orders, "gate_bkt_orders", "o_orderkey"),
-        )))
+    run_concurrently(
+        lambda: write_bucketed(li, "gate_bkt_lineitem", "l_orderkey",
+                               num_buckets=8),
+        lambda: write_bucketed(orders, "gate_bkt_orders", "o_orderkey",
+                               num_buckets=8),
+    )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1598,11 +1593,10 @@ def docs_stream_quarantine_land(spark: SparkSession,
     with open(os.path.join(drop, "part-99999-bad.json"), "w") as fh:
         fh.write(bad + "\n")
     landed_path = os.path.join(root, "landed")
-    q = stream_land_with_quarantine(
+    stream_land_with_quarantine(
         spark, drop, "json",
         "doc_id bigint, lang string, n_chars bigint", landed_path,
         checkpoint=os.path.join(root, "ckpt"), maxFilesPerTrigger="2")
-    q.awaitTermination()
     landed = spark.read.parquet(landed_path)
     clean = landed.where(F.col("_corrupt_record").isNull())
     agg = clean.groupBy("lang").agg(
@@ -1645,6 +1639,7 @@ def formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``convert_to_parquet``) and pushdown assertions live in
     tests/test_formats.py; this gate pins the driver-visible face."""
     import tempfile
+    from functools import partial
 
     from pandas_rust_algos_spark.sources.formats import (
         read_source,
@@ -1664,13 +1659,9 @@ def formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task tail back-fills the executors the others free (guide §2.6:
     # actions are only sequential because driver code calls them
     # sequentially). Same three writes, same bytes, same read-backs.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _land(fmt: str) -> None:
-        write_sink(li, f"{root}/{fmt}", fmt, mode="overwrite")
-
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        list(ex.map(_land, ("csv", "json", "orc")))
+    run_concurrently(*(
+        partial(write_sink, li, f"{root}/{fmt}", fmt, mode="overwrite")
+        for fmt in ("csv", "json", "orc")))
 
     outs = []
     for fmt in ("csv", "json", "orc"):

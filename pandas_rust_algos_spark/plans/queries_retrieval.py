@@ -393,7 +393,7 @@ def docs_stream_bloom_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, bloom, n=5, m_bits=1 << 16, n_hashes=4, min_hits=1)
     out = se.run_available_now(
         screened, table="docs_stream_bloom_out",
-        output_mode="complete", state_partitions=8)
+        output_mode="complete")
     return out.select(
         "doc_id", F.col("n_grams").cast("long"),
         F.col("n_flagged").cast("long"), "contaminated")

@@ -60,7 +60,9 @@ Call-site capture (``spark.python.sql.dataFrameDebugging.enabled``):
 
 from __future__ import annotations
 
+import concurrent.futures
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -115,6 +117,19 @@ def tune(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+def run_concurrently(*thunks: Callable[[], object]) -> list:
+    """Call each thunk on its own thread and return their results in
+    argument order.
+
+    Independent Spark actions submitted from separate threads run as
+    concurrent jobs, so one job's task tail back-fills the executors the
+    others free. Every thunk runs to completion before this returns;
+    if any failed, the first failure in argument order is re-raised."""
+    with concurrent.futures.ThreadPoolExecutor(len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    return [f.result() for f in futures]
 
 
 def local_df(spark: SparkSession, rows, schema: str):

@@ -170,7 +170,6 @@ def stream_land_with_quarantine(
     *,
     checkpoint: str,
     corrupt_col: str = "_corrupt_record",
-    available_now: bool = True,
     **options: str,
 ):
     """Streaming twin of :func:`land_with_quarantine` — the landing
@@ -194,7 +193,7 @@ def stream_land_with_quarantine(
     wipes them itself, because a same-checkpoint replay of batch 0
     must not delete sibling partitions.
 
-    Returns the StreamingQuery (caller owns awaitTermination)."""
+    Returns the query, drained."""
     if fmt not in ("csv", "json"):
         raise ValueError(
             f"quarantine landing is for text formats (csv/json), got "
@@ -205,6 +204,10 @@ def stream_land_with_quarantine(
         raise ValueError(f"schema already contains {corrupt_col!r}")
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructField
+
+    from pandas_rust_algos_spark.streaming.sinks import (
+        drain, overwrite_partitions,
+    )
 
     with_corrupt = StructType(
         list(schema.fields) + [StructField(corrupt_col, StringType())])
@@ -218,21 +221,7 @@ def stream_land_with_quarantine(
     stream = reader.format(fmt).load(src_path)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # per-writer option, NOT a session-global conf toggle — a
-        # set/restore on the shared session could flip a concurrent
-        # static-mode overwrite to dynamic mid-write (ADVICE r11)
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(dest_path)
-        )
+        overwrite_partitions(batch_df.withColumn("batch_id", F.lit(batch_id)),
+                             dest_path, ["batch_id"])
 
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream.writeStream.foreachBatch(sink), checkpoint)

@@ -32,20 +32,6 @@ from pyspark.sql.utils import AnalysisException
 __all__ = ["merge_into_partitioned", "write_stream_upsert"]
 
 
-def _dynamic_overwrite(df: DataFrame, path: str, partition_col: str) -> None:
-    # per-writer option, NOT a session-global conf toggle: a
-    # set/restore on the shared session could flip a concurrent
-    # static-mode overwrite to dynamic mid-write (the ann_index /
-    # minhash_store stream sinks' ADVICE-r11 fix, applied here too)
-    (
-        df.repartition(partition_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
 def merge_into_partitioned(
     spark: SparkSession,
     target_path: str,
@@ -61,6 +47,8 @@ def merge_into_partitioned(
     the partitions present in the batch. Idempotent — replaying the
     same batch reproduces the same table (the foreachBatch contract).
     """
+    from pandas_rust_algos_spark.streaming.sinks import overwrite_partitions
+
     upserts = updates
     if delete_col is not None:
         upserts = updates.where(~F.coalesce(F.col(delete_col), F.lit(False))) \
@@ -70,7 +58,8 @@ def merge_into_partitioned(
     try:
         target = spark.read.parquet(target_path)
     except AnalysisException:  # first batch bootstraps the table
-        _dynamic_overwrite(upserts, target_path, partition_col)
+        overwrite_partitions(upserts.repartition(partition_col),
+                             target_path, [partition_col])
         return
 
     touched = [
@@ -81,7 +70,8 @@ def merge_into_partitioned(
         F.broadcast(updates.select(*key_cols).distinct()), key_cols, "left_anti"
     )
     merged = kept.select(*upserts.columns).unionByName(upserts)
-    _dynamic_overwrite(merged, target_path, partition_col)
+    overwrite_partitions(merged.repartition(partition_col), target_path,
+                         [partition_col])
 
 
 def write_stream_upsert(
@@ -92,13 +82,13 @@ def write_stream_upsert(
     partition_col: str,
     checkpoint: str,
     delete_col: str | None = None,
-    available_now: bool = True,
 ):
     """Streaming upsert sink: every micro-batch merges into the
     partitioned parquet target. foreachBatch is at-least-once;
     ``merge_into_partitioned`` is idempotent per batch, so the sink is
-    effectively-once without a transaction log. Returns the
-    StreamingQuery (caller owns awaitTermination/stop)."""
+    effectively-once without a transaction log. Returns the query,
+    drained."""
+    from pandas_rust_algos_spark.streaming.sinks import drain
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_into_partitioned(
@@ -106,10 +96,4 @@ def write_stream_upsert(
             delete_col=delete_col,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream.writeStream.foreachBatch(sink), checkpoint)

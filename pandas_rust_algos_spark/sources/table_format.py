@@ -939,15 +939,16 @@ class VersionedTable:
     # ---------------------------------------------------------- streaming
 
     def write_stream(self, stream: DataFrame, *, checkpoint: str,
-                     mode: str = "merge", delete_col: str | None = None,
-                     available_now: bool = True):
+                     mode: str = "merge", delete_col: str | None = None):
         """Streaming sink: each micro-batch lands as one atomic commit
         (``mode='append'`` for blind event streams, ``'merge'`` for
         keyed upserts). foreachBatch is at-least-once; merge is
         idempotent per batch (same keys → same result) and the commit
         protocol makes replays visible in ``history()`` rather than
         corrupting — the lakehouse answer to
-        ``merge.write_stream_upsert``. Returns the StreamingQuery."""
+        ``merge.write_stream_upsert``. Returns the query, drained."""
+        from pandas_rust_algos_spark.streaming.sinks import drain
+
         if mode not in ("append", "merge"):
             raise ValueError(f"mode must be append|merge, got {mode!r}")
 
@@ -968,11 +969,7 @@ class VersionedTable:
                 else:
                     self.merge(batch_df, delete_col=delete_col)
 
-        writer = (stream.writeStream.foreachBatch(sink)
-                  .option("checkpointLocation", checkpoint))
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return drain(stream.writeStream.foreachBatch(sink), checkpoint)
 
     # ------------------------------------------------------------- vacuum
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pandas_rust_algos_spark.operators import cells
+from pandas_rust_algos_spark.streaming.sinks import drain
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -189,12 +190,24 @@ def dedup_stream(
     )
 
 
+#: State shards of every availableNow drain (``run_available_now``).
+#: Spark pins a stateful operator's state partitioning from
+#: ``spark.sql.shuffle.partitions`` at the FIRST batch of a checkpoint,
+#: and every shard then pays a per-batch state-store commit (delta file
+#: + CRC on the checkpoint FS) however little state it holds. Profiling
+#: the stream-stream join gate at sf0.1 (200k-row microbatch, 40k state
+#: rows): 32 shards → ~8s/drain, 8 shards → ~2s — the commit fan-out,
+#: not the join, was the cost. So shards track the stream's state
+#: volume (event rate × watermark horizon), not the session's batch
+#: shuffle width.
+STATE_PARTITIONS = 8
+
+
 def run_available_now(
     agged: DataFrame,
     *,
     table: str = "stream_out",
     output_mode: str = "complete",
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain all available input through the streaming query into an
     in-memory sink and return the result as a DataFrame (test/backfill
@@ -203,36 +216,22 @@ def run_available_now(
     (applyInPandasWithState rejects complete); the memory sink then
     accumulates one row per emission — callers keep the latest per key.
 
-    ``state_partitions`` sizes the stateful operator's shard count:
-    Spark pins the state partitioning from ``spark.sql.shuffle
-    .partitions`` at the FIRST batch of a checkpoint, and every shard
-    then pays a per-batch state-store commit (delta file + CRC on the
-    checkpoint FS) regardless of how little state it holds. Profiling
-    the stream-stream join gate at sf0.1 (200k-row microbatch, 40k
-    state rows): 32 shards → ~8s/drain, 8 shards → ~2s — the commit
-    fan-out, not the join, was the cost. Size shards to event rate ×
-    watermark horizon (state volume), NOT to the session's batch
-    shuffle width; the session conf is restored after the query starts
-    since the first batch has already pinned it."""
+    The query runs at :data:`STATE_PARTITIONS` shuffle partitions; the
+    session conf is restored after the drain (the first batch has
+    already pinned the state partitioning)."""
     spark = agged.sparkSession
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         with tempfile.TemporaryDirectory() as ckpt:
-            q = (
+            drain(
                 agged.writeStream.format("memory")
                 .queryName(table)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .outputMode(output_mode),
+                ckpt,
             )
-            q.awaitTermination()
     finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(table)
 
 
@@ -266,7 +265,6 @@ def kmv_windowed_store(
     k: int = 64,
     trunc: str = "hour",
     hash_mode: str = "portable",
-    available_now: bool = True,
 ):
     """Maintain a PERSISTED per-window KMV sketch store over a stream
     — the set-algebra member of the streaming sketch family (CMS
@@ -292,7 +290,8 @@ def kmv_windowed_store(
     the store answers "overlap between this hour's and last hour's
     keys" LIVE through ``kmv_set_ops`` on KiB of state. Window
     eviction (retention) is a caller-side DELETE by window age; late
-    rows simply merge into their window, exactly."""
+    rows simply merge into their window, exactly. Returns the drained
+    query."""
     from pandas_rust_algos_spark.operators.kmv import (
         kmv_merge,
         kmv_sketch,
@@ -317,13 +316,7 @@ def kmv_windowed_store(
         merged = kmv_merge(*sketches, k=k)
         merged.coalesce(1).write.mode("overwrite").parquet(store_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream.writeStream.foreachBatch(sink), checkpoint)
 
 
 def hist2d_windowed(

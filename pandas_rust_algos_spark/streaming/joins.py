@@ -67,9 +67,6 @@ def enrich_with_dim(
     stream: DataFrame,
     dim: DataFrame,
     on,
-    *,
-    how: str = "left",
-    broadcast: bool = True,
 ) -> DataFrame:
     """Stream-static enrichment join — the stateless workhorse of every
     event pipeline (attach user/account/catalog attributes to events).
@@ -78,9 +75,8 @@ def enrich_with_dim(
     re-evaluated against each micro-batch, so a dimension that lives in
     a table the pipeline also maintains (e.g. the upsert-merge target)
     is picked up fresh every batch — slowly-changing dimensions for
-    free. ``broadcast`` pins the build side to a broadcast hash join so
-    the streaming side never shuffles; leave it on for anything that
-    fits in executor memory (at 100 TB the event stream is the big
+    free. A left join keeps every event; the dimension is broadcast so
+    the streaming side never shuffles, which holds for any dimension
+    that fits in executor memory (at 100 TB the event stream is the big
     side by orders of magnitude)."""
-    d = F.broadcast(dim) if broadcast else dim
-    return stream.join(d, on, how)
+    return stream.join(F.broadcast(dim), on, "left")

@@ -14,7 +14,7 @@ any production stateful op needs at scale.
 Timeout contract: ``idle_timeout_ms`` opts keys into processing-time
 expiry so abandoned keys don't accumulate state on a long-running
 cluster. It is **off by default** because a drain-style run
-(``trigger(availableNow=True)``, how tests and backfills execute)
+(an availableNow trigger, how tests and backfills execute)
 never terminates with ProcessingTimeTimeout armed: after the data is
 exhausted, Spark keeps scheduling empty micro-batches to service the
 pending timeouts until they fire (observed: hundreds of empty batches

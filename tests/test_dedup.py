@@ -551,7 +551,7 @@ def test_minhash_store_stream_ingest(spark, tmp_path):
                   .option("maxFilesPerTrigger", 1).parquet(landing))
         q = stream_ingest_minhash_store(
             path, stream, checkpoint=str(tmp_path / ckpt_name))
-        q.awaitTermination()
+        assert len(q.recentProgress) <= 1
 
     path_s = str(tmp_path / "mh_stream")
     write_minhash_store(old, path_s, num_hashes=16, bands=4,
@@ -600,7 +600,7 @@ def test_minhash_store_stream_ingest(spark, tmp_path):
     q2 = stream_ingest_minhash_store(
         path_s, stream2, checkpoint=str(tmp_path / "ckpt3"),
         guard_existing=True)
-    q2.awaitTermination()
+    assert len(q2.recentProgress) <= 1
     assert read_store_sigs(spark, path_s).count() == 9  # unchanged
 
 
@@ -637,7 +637,7 @@ def test_minhash_store_meta_only_stream_then_bootstrap(spark, tmp_path):
               .option("maxFilesPerTrigger", 1).parquet(landing))
     q = stream_ingest_minhash_store(
         path, stream, checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination()
+    assert len(q.recentProgress) <= 1
     # bootstrap lands after the drain — the overlapped gate's
     # worst-case ordering
     assert write_minhash_store(old, path, num_hashes=16, bands=4,
@@ -650,7 +650,7 @@ def test_minhash_store_meta_only_stream_then_bootstrap(spark, tmp_path):
                .option("maxFilesPerTrigger", 1).parquet(landing))
     q2 = stream_ingest_minhash_store(
         seq, stream2, checkpoint=str(tmp_path / "ckpt2"))
-    q2.awaitTermination()
+    assert len(q2.recentProgress) <= 1
 
     got = sorted(map(tuple, read_store_sigs(spark, path).collect()))
     want = sorted(map(tuple, read_store_sigs(spark, seq).collect()))

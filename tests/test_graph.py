@@ -66,12 +66,6 @@ def test_partition_invariance_bit_exact(spark):
     assert a == b == _ref(edges, n_iter=4)
 
 
-def test_checkpoint_path_identical(spark):
-    edges = [(i, (i + 1) % 10) for i in range(10)] + [(0, 5), (3, 7)]
-    assert _run(spark, edges, n_iter=6, checkpoint_every=2) == \
-        _ref(edges, n_iter=6)
-
-
 def test_bad_args(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(ValueError):

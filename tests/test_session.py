@@ -1,13 +1,16 @@
-"""Session configuration: the environment knobs (no Spark needed) and
-what an engine session's settings keep of an error."""
+"""Session configuration: the environment knobs and the concurrency
+helper (no Spark needed), and what an engine session's settings keep
+of an error."""
 
 from __future__ import annotations
 
 import re
+import threading
+import time
 
 import pytest
 
-from pandas_rust_algos_spark.session import _cpus
+from pandas_rust_algos_spark.session import _cpus, run_concurrently
 
 
 def test_cpus_default_and_value(monkeypatch):
@@ -22,6 +25,36 @@ def test_cpus_rejects_bad_value_by_name(monkeypatch, bad):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS.*" + re.escape(repr(bad))):
         _cpus()
+
+
+def test_run_concurrently_orders_results_and_raises_first_failure():
+    """One thread per thunk (all three meet at one barrier), results in
+    argument order whatever the finishing order, every thunk joined
+    before the first failure in argument order is re-raised."""
+    meet = threading.Barrier(3, timeout=10)
+
+    def slow(value, delay):
+        meet.wait()
+        time.sleep(delay)
+        return value
+
+    assert run_concurrently(lambda: slow("a", 0.2), lambda: slow("b", 0.1),
+                            lambda: slow("c", 0.0)) == ["a", "b", "c"]
+
+    finished = []
+
+    def fail(msg, delay):
+        time.sleep(delay)
+        raise ValueError(msg)
+
+    def late():
+        time.sleep(0.2)
+        finished.append("late")
+
+    with pytest.raises(ValueError, match="first"):
+        run_concurrently(lambda: fail("first", 0.1), late,
+                         lambda: fail("second", 0.0))
+    assert finished == ["late"]
 
 
 def test_analysis_error_keeps_class_and_column(spark):

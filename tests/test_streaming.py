@@ -4,6 +4,7 @@ bounded stream (trigger availableNow) and as a plain batch query."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pandas_rust_algos_spark.plans import registry
@@ -139,8 +140,7 @@ def test_foreachbatch_sink_idempotent_partitioned(spark, sf_dir, tmp_path):
         q = write_stream_partitioned(
             stream, out_dir, partition_by=["event_type"], checkpoint=ckpt
         )
-        q.awaitTermination(120)
-        q.stop()
+        assert len(q.recentProgress) <= 1
 
     drain(str(tmp_path / "ck1"))
     first = spark.read.parquet(out_dir)
@@ -153,6 +153,22 @@ def test_foreachbatch_sink_idempotent_partitioned(spark, sf_dir, tmp_path):
     drain(str(tmp_path / "ck2"))
     again = spark.read.parquet(out_dir)
     assert again.count() == ev.count()
+
+
+def test_drain_raises_the_sink_failure(spark, sf_dir, tmp_path):
+    """A landing waits for its drain: a micro-batch whose foreachBatch
+    sink fails raises from the landing call itself, and no query is
+    left running."""
+    from pyspark.errors import StreamingQueryException
+
+    from pandas_rust_algos_spark.streaming.sinks import write_stream_partitioned
+
+    stream = se.read_events_stream(spark, sf_dir)
+    with pytest.raises(StreamingQueryException, match="no_such_col"):
+        write_stream_partitioned(
+            stream, str(tmp_path / "out"), partition_by=["no_such_col"],
+            checkpoint=str(tmp_path / "ck"))
+    assert spark.streams.active == []
 
 
 def test_stream_static_enrich_matches_batch(spark, sf_dir):
@@ -185,8 +201,6 @@ def test_transform_with_state_matches_classic(spark, sf_dir):
     applyInPandasWithState operator and the batch aggregate. Skipped
     where the protobuf runtime dependency is absent; the operator then
     raises a clear ImportError at plan time (also asserted)."""
-    import pytest
-
     from pandas_rust_algos_spark.sources import load_table
     from pandas_rust_algos_spark.streaming.stateful import (
         running_user_profile_tws,
@@ -509,7 +523,7 @@ def test_kmv_windowed_store_matches_batch_and_is_idempotent(
     q = se.kmv_windowed_store(
         stream, store, checkpoint=str(tmp_path / "ckpt"),
         key="user_id", k=16, hash_mode="portable")
-    q.awaitTermination()
+    assert len(q.recentProgress) <= 2
 
     win = F.date_format(F.date_trunc("hour", F.col("ts")),
                         "yyyy-MM-dd HH:mm:ss")
@@ -544,7 +558,7 @@ def test_hist2d_windowed_stream_cells_equal_batch(spark, sf_dir):
         (F.col("user_id") % 64).cast("double").alias("y"))
     cells = se.run_available_now(
         se.hist2d_windowed(stream, "x", "y", **args),
-        table="t_stream_hist2d", state_partitions=8)
+        table="t_stream_hist2d")
 
     from pandas_rust_algos_spark.sources import load_table
 

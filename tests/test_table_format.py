@@ -235,7 +235,7 @@ def test_write_stream_merge_sink(spark, tmp_path):
               .option("maxFilesPerTrigger", "1").parquet(src))
     tbl = _mk(spark, tmp_path)
     q = tbl.write_stream(stream, checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    assert len(q.recentProgress) <= 4
     assert _ids(tbl) == list(range(10))
     ops = [h["op"] for h in tbl.history()]
     assert ops[0] == "create" and set(ops[1:]) <= {"merge"}
@@ -245,7 +245,7 @@ def test_write_stream_merge_sink(spark, tmp_path):
     stream2 = (spark.readStream.schema("id long, payload string")
                .parquet(src2))
     q2 = tbl.write_stream(stream2, checkpoint=str(tmp_path / "ckpt2"))
-    q2.awaitTermination(120)
+    assert len(q2.recentProgress) <= 1
     got = _payloads(tbl)
     assert got[3] == "v2-3" and got[42] == "v2-42" and got[7] == "v1-7"
 
