@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from pandas_rust_algos_spark.plans.registry import dsum, register
 from pandas_rust_algos_spark.session import tune
-from pandas_rust_algos_spark.sources import load_table
+from pandas_rust_algos_spark.sources import file_schema, load_table
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 _FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -1760,7 +1760,8 @@ def events_stream_kmv_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         [pf] = glob.glob(
             _os.path.join(part_dir, f"__slice={i}", "part-*.parquet"))
         shutil.move(pf, _os.path.join(stream_dir, f"slice{i}.parquet"))
-    schema = spark.read.parquet(stream_dir).schema
+    # one Spark write made the three slices, so they share a footer schema
+    schema = file_schema(spark, _os.path.join(stream_dir, "slice0.parquet"))
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

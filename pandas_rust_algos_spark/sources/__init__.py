@@ -15,6 +15,7 @@ from pandas_rust_algos_spark.sources.merge import (
 )
 from pandas_rust_algos_spark.sources.parquet import (
     TABLES,
+    file_schema,
     load_table,
     load_tables,
     register_views,
@@ -32,6 +33,7 @@ from pandas_rust_algos_spark.sources.table_format import (
 
 __all__ = [
     "TABLES",
+    "file_schema",
     "load_table",
     "load_tables",
     "register_views",

@@ -6,15 +6,23 @@ sources are lazy parquet scans: column pruning and predicate pushdown
 reach the file scan via Catalyst, so a 2-column projection over a
 100 TB table reads 2 columns' worth of bytes, not 100 TB.
 
-Nothing here caches or collects: a loaded table is a *plan node*, not
-data, and stays that way until an action runs.
+A loaded table is a *plan node*, not data, and loading one runs no
+Spark job: :func:`file_schema` reads the schema from the file's parquet
+footer on the driver, with the converter Spark's schema inference runs
+inside its job, and the scan is built on that schema. Each call reads
+its own file's footer, so a rewritten file is seen on the next load.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from typing import Callable
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 #: every fixture table the driver generates (TESTDATA.md)
 TABLES = (
@@ -42,8 +50,39 @@ CACHE_SMALL_TABLES = False
 _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan of one fixture table.
+def file_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark's inference gives one parquet file, read from
+    its footer on the driver. Inference (``spark.read.parquet(path)``
+    with no schema) runs this footer conversion, under the session's
+    SQL conf, in one Spark job; so ``nanosAsLong``, ``timestamp_ntz``
+    inference and Spark's row metadata all apply, and fields come back
+    nullable as a scan's do. Nothing is cached across calls."""
+    # by full name: ``spark._jvm.org.apache...`` costs a py4j round trip
+    # per package segment
+    def jclass(name: str) -> JavaClass:
+        return JavaClass(name, spark._jvm._gateway_client)
+
+    pq = "org.apache.spark.sql.execution.datasources.parquet."
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    jpath = jclass("org.apache.hadoop.fs.Path")(path)
+    if not jpath.getFileSystem(conf).isFile(jpath):
+        raise ValueError(f"not a parquet file: {path!r}")
+    footer = jclass(pq + "ParquetFooterReader").readFooter(
+        jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(jpath, conf),
+        jclass("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+    )
+    schema = jclass(pq + "ParquetFileFormat").readSchemaFromFooter(
+        jclass("org.apache.parquet.hadoop.Footer")(jpath, footer),
+        jclass(pq + "ParquetToSparkSchemaConverter")(state.conf()),
+    )
+    return StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
+def scan_table(spark: SparkSession, sf_dir: str, name: str,
+               read: Callable[[StructType, str], DataFrame]) -> DataFrame:
+    """One fixture table through ``read(schema, path)``, a batch or a
+    stream scan, with the events ``ts`` made a TIMESTAMP.
 
     The events table carries TIMESTAMP(NANOS) which Spark's parquet
     reader rejects; we read nanos as long
@@ -51,37 +90,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     rebuild a microsecond timestamp with integer division — ``ts div
     1000`` stays exact where a double division of epoch-nanos would
     lose precision past 2^53. Truncation (not rounding) matches
-    DuckDB's TIMESTAMP_NS→TIMESTAMP cast, keeping oracles aligned.
+    DuckDB's TIMESTAMP_NS→TIMESTAMP cast, keeping oracles aligned. A
+    TIMESTAMP_NTZ ``ts`` is cast (exact: the session is pinned to UTC).
     """
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; one of {TABLES}")
-    if CACHE_SMALL_TABLES:
-        key = (id(spark.sparkContext), os.path.abspath(sf_dir), name)
-        cached = _TABLE_CACHE.get(key)
-        if cached is not None:
-            return cached
-    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            from pyspark.sql import functions as F
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = file_schema(spark, path)
+    df = read(schema, path)
+    ts = schema["ts"].dataType if name == "events" else None
+    if isinstance(ts, LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif isinstance(ts, TimestampNTZType):
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif ts_type == "timestamp_ntz":
-            # normalize to TIMESTAMP so window/watermark/unix_micros all
-            # apply; the session is pinned to UTC so the cast is exact
-            from pyspark.sql import functions as F
 
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(path)
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy parquet scan of one fixture table (:func:`scan_table`)."""
+    if CACHE_SMALL_TABLES:
+        key = (id(spark.sparkContext), os.path.abspath(sf_dir), name)
+        cached = _TABLE_CACHE.get(key)
+        if cached is not None:
+            return cached
+    df = scan_table(spark, sf_dir, name,
+                    lambda schema, path: spark.read.schema(schema).parquet(path))
     if CACHE_SMALL_TABLES:
         df = df.persist()
         _TABLE_CACHE[key] = df

@@ -20,26 +20,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pandas_rust_algos_spark.operators import cells
+from pandas_rust_algos_spark.sources.parquet import scan_table
 from pandas_rust_algos_spark.streaming.sinks import drain
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as an unbounded stream (:func:`read_table_stream`).
-
-    Same TIMESTAMP(NANOS) handling as the batch loader
-    (``sources.parquet.load_table``): nanos read as long, rebuilt as a
-    truncated microsecond timestamp, so stream and batch agree."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    stream = read_table_stream(spark, sf_dir, "events")
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        # watermarks require TIMESTAMP; UTC session makes the cast exact
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    """events as an unbounded stream (:func:`read_table_stream`), with
+    ``ts`` rebuilt as the batch loader (``sources.parquet.load_table``)
+    rebuilds it, so stream and batch agree."""
+    return read_table_stream(spark, sf_dir, "events")
 
 
 def tumbling_counts(stream: DataFrame, *, watermark: str = "2 hours") -> DataFrame:
@@ -237,23 +226,18 @@ def run_available_now(
 
 def read_table_stream(spark: SparkSession, sf_dir: str,
                       table: str) -> DataFrame:
-    """Any fixture table as an unbounded file stream: schema from the
-    batch file, ``maxFilesPerTrigger`` keeps micro-batches bounded.
-    FileStreamSource requires a *directory* to monitor and the fixture
-    is a single read-only file, so it is exposed through a symlink dir
-    (production reads a landing directory or a Kafka topic). No
-    timestamp rebuild; ``read_events_stream`` adds the events one."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    schema = spark.read.parquet(path).schema
-    stream_dir = tempfile.mkdtemp(prefix=f"{table}_stream_")
-    link = os.path.join(stream_dir, f"{table}.parquet")
-    if not os.path.exists(link):
-        os.symlink(path, link)
-    return (
-        spark.readStream.schema(schema)
+    """Any fixture table as an unbounded file stream, through the batch
+    loader's schema and ``ts`` decision (``sources.parquet.scan_table``).
+    FileStreamSource monitors a *directory*; the fixture is one file in
+    ``sf_dir``, so the stream watches ``sf_dir`` and a ``pathGlobFilter``
+    keeps only that file (production reads a landing directory or a
+    Kafka topic). ``maxFilesPerTrigger`` keeps micro-batches bounded."""
+    return scan_table(
+        spark, sf_dir, table,
+        lambda schema, path: spark.readStream.schema(schema)
+        .option("pathGlobFilter", os.path.basename(path))
         .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
+        .parquet(os.path.dirname(path)))
 
 
 def kmv_windowed_store(

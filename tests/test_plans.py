@@ -183,7 +183,9 @@ def test_winsorize_single_shuffle_narrow_bounds(spark, sf_dir):
 
 # Spark jobs per gate's collect at sf0.001 on local[4], as measured
 # before the sketch families shared one cell skeleton; a merge that
-# loses its map-side combine or gains a pass shows up here first.
+# loses its map-side combine or gains a pass shows up here first. The
+# job-count tests wait for the listener bus, so the status tracker holds
+# every job of the call when they count.
 _SKETCH_MERGE_JOBS = {
     "cms_incremental_merge": 6,
     "hll_incremental_merge": 7,
@@ -207,6 +209,7 @@ def test_sketch_merges_two_phase_jvm_side_job_count(spark, sf_dir, name):
         df.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     plan = explain(spark, df)
     assert "partial_" in plan, f"{name}: lost the map-side partial agg"
@@ -221,21 +224,21 @@ def test_sketch_merges_two_phase_jvm_side_job_count(spark, sf_dir, name):
 # pool threads, whose jobs carry no group; its count is the main
 # thread's share (it varies by one with thread timing).
 _ANN_JOBS = {
-    "cosine_topk": 6,
-    "hard_negatives": 6,
-    "ann_lsh_topk": 7,
-    "ann_pq_topk": 10,
-    "ann_ivf_topk": 11,
-    "ann_ivf_topk_portable": 13,
-    "ann_pq_topk_portable": 13,
-    "ann_ivfpq_topk": 15,
-    "ann_ivfpq_topk_portable": 19,
-    "ann_index_topk": 18,
-    "ann_ivfpq_rerank_topk": 22,
-    "ann_float_recall_bounds": 27,
-    "ann_index_append_topk": 21,
-    "ann_index_stream_append": 21,
-    "ann_ivfpq_index_read": 27,
+    "cosine_topk": 5,
+    "hard_negatives": 5,
+    "ann_lsh_topk": 6,
+    "ann_pq_topk": 9,
+    "ann_ivf_topk": 10,
+    "ann_ivf_topk_portable": 12,
+    "ann_pq_topk_portable": 12,
+    "ann_ivfpq_topk": 14,
+    "ann_ivfpq_topk_portable": 18,
+    "ann_index_topk": 17,
+    "ann_ivfpq_rerank_topk": 21,
+    "ann_float_recall_bounds": 26,
+    "ann_index_append_topk": 20,
+    "ann_index_stream_append": 20,
+    "ann_ivfpq_index_read": 26,
 }
 
 
@@ -250,6 +253,7 @@ def test_ann_gate_job_count(spark, sf_dir, name):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         cachelife.release()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= _ANN_JOBS[name], (name, len(jobs))
 
@@ -286,17 +290,24 @@ ClientServerConnection.send_command = counted
 spark = get_spark("session-pin")
 spark.sparkContext.setLogLevel("ERROR")
 metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-compiles, build_trips = [], {}
-for _ in range(2):
+sc = spark.sparkContext
+compiles, build_trips, build_jobs = [], {}, {}
+for cycle in range(2):
     before = metrics.METRIC_COMPILATION_TIME().getCount()
     for name in names:
+        group = f"build-{cycle}-{name}"
+        sc.setJobGroup(group, "fn call job count")
         start = trips
         df = registry.get(name).fn(spark, sf_dir)
         build_trips[name] = trips - start
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        build_jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         df.write.format("noop").mode("overwrite").save()
         cachelife.release()
     compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
 print(json.dumps({"compiles": compiles, "build_trips": build_trips,
+                  "build_jobs": build_jobs,
                   "call_site_capture": is_debugging_enabled()}))
 spark.stop()
 """
@@ -305,8 +316,9 @@ spark.stop()
 @pytest.fixture(scope="module")
 def session_probe(sf_dir):
     """Two cycles over :data:`_CODEGEN_CYCLE` in a fresh process: the
-    classes each cycle compiles, the py4j round trips of each query's
-    warm (second-cycle) fn call, and whether call-site capture is on.
+    classes each cycle compiles, the py4j round trips and the Spark jobs
+    of each query's warm (second-cycle) fn call, and whether call-site
+    capture is on.
 
     A fresh process, so classes cached by earlier tests can neither
     evict these entries nor hide misses, and PySpark's process-wide
@@ -333,7 +345,18 @@ def test_codegen_cache_holds_a_registry_cycle(session_probe):
 def test_warm_build_round_trips(session_probe):
     """Engine sessions turn PySpark's per-call call-site capture off, so
     a warm ``group_quantile_linear`` build stays a few hundred py4j
-    round trips (482 measured; over 1,400 with capture on)."""
+    round trips (505 measured, 23 of them the footer schema read of
+    its table load; over 1,400 with capture on)."""
     assert session_probe["call_site_capture"] is False
     trips = session_probe["build_trips"]["group_quantile_linear"]
     assert trips <= 600, f"warm group_quantile_linear build took {trips} round trips"
+
+
+def test_warm_batch_builds_run_no_job(session_probe):
+    """Building a batch query's plan runs no Spark job: every table load
+    reads its schema from the parquet footer on the driver, where an
+    inferring read ran one job per load. The stream gate drains inside
+    its fn call, so only the batch queries are pinned."""
+    jobs = {name: n for name, n in session_probe["build_jobs"].items()
+            if name != "events_stream_cms"}
+    assert jobs == dict.fromkeys(jobs, 0), jobs
